@@ -92,7 +92,11 @@ def test_pcap_reader_plans_memory_paths():
         schema, {"path": url, "engine": "native", "split_threshold": "64"}
     )
     parts = reader.partitions()
-    assert len(parts) > 1  # tiny threshold forces byte-range splits
+    # a tiny threshold still forces ceil(size / threshold) range splits
+    size = len(two_flow_pcap())
+    assert len(parts) == -(-size // 64) > 1
+    with pytest.raises(ValueError, match="split_threshold"):
+        PcapReader(schema, {"path": url, "split_threshold": "0"})
     assert all(p.path == url for p in parts)
     # and the executor-side read path works against the same seam
     total = sum(

@@ -116,6 +116,96 @@ def test_split_read_through_spark(spark, tmp_path):
     assert agg(split) == agg(whole)
 
 
+MiB = 1 << 20
+
+
+@pytest.mark.parametrize("size, n_slices", [
+    (1 * MiB, 1),
+    (pcap_mod.SPLIT_BYTES, 1),
+    (pcap_mod.SPLIT_BYTES + 1, 2),
+    (64 * MiB + 512 * 1024, 3),
+])
+def test_split_rule_is_shared_by_batch_and_stream_readers(
+        tmp_path, size, n_slices):
+    """One split rule, planned from the size alone (the capture is a
+    sparse file): at most SPLIT_BYTES stays one whole-file partition, a
+    larger capture becomes ceil(size / SPLIT_BYTES) contiguous slices
+    covering [header, size), and the batch and the stream reader plan
+    the same ranges for the same (path, size)."""
+    import json
+
+    from wireduck_spark.sources.native import GLOBAL_HEADER_LEN
+    from wireduck_spark.streaming.pcap_stream import PcapStreamReader
+
+    p = tmp_path / "big.pcap"
+    with open(p, "wb") as fh:
+        fh.truncate(size)
+    path = str(p)
+    schema = pcap_mod.PcapDataSource({}).schema()
+    batch = [
+        (q.start_byte, q.end_byte)
+        for q in pcap_mod.PcapReader(
+            schema, {"path": path, "engine": "native"}).partitions()
+    ]
+    stream = [
+        (q.start_byte, q.end_byte)
+        for q in PcapStreamReader(schema, {"path": path}).partitions(
+            {"files": "{}"}, {"files": json.dumps({path: size})})
+    ]
+    ranges = pcap_mod.split_ranges(path, size)
+    if n_slices == 1:
+        assert ranges is None
+        assert batch == [(None, None)]
+        assert stream == [(0, size)]
+    else:
+        assert batch == stream == ranges
+        assert len(ranges) == n_slices
+        assert ranges[0][0] == GLOBAL_HEADER_LEN
+        assert ranges[-1][1] == size
+        assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+
+
+def test_register_ships_the_package_once(spark, pcap_file):
+    """read_pcap and read_pcap_stream register on every call, but the
+    package zip is shipped once per context: addPyFile would otherwise
+    grow the include list sent to every task, and the driver's
+    sys.path, by one entry per read."""
+    import sys
+
+    from wireduck_spark.streaming.pcap_stream import register_stream
+
+    sc = spark.sparkContext
+    read_pcap(spark, pcap_file, engine="native")
+    includes = list(sc._python_includes)
+    n_path = len(sys.path)
+    for _ in range(5):
+        read_pcap(spark, pcap_file, engine="native")
+        register_stream(spark)
+    assert sc._python_includes == includes
+    assert len(sys.path) == n_path
+
+
+def test_package_zip_is_named_by_content(tmp_path):
+    """The shipped zip is named by a hash of the package sources: the
+    same code reuses its zip, and changed code gets a new one (a zip
+    named by version alone handed one checkout's old code to another)."""
+    import zipfile
+
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "__init__.py").write_text("A = 1\n")
+    (pkg / "sub" / "m.py").write_text("B = 2\n")
+    out = tmp_path / "out"
+    out.mkdir()
+    first = pcap_mod._package_zip(str(pkg), str(out))
+    assert pcap_mod._package_zip(str(pkg), str(out)) == first
+    (pkg / "sub" / "m.py").write_text("B = 3\n")
+    changed = pcap_mod._package_zip(str(pkg), str(out))
+    assert changed != first
+    with zipfile.ZipFile(changed) as zf:
+        assert zf.read("wireduck_spark/sub/m.py") == b"B = 3\n"
+
+
 def test_tshark_split_read_through_spark(spark, tmp_path):
     """Split-tshark end-to-end through Spark (round-3 VERDICT #3): a
     classic capture forced to split plans multiple byte-range partitions

@@ -2885,46 +2885,17 @@ def _iter_pcapng_records(fh, size: int, start_byte=None, end_byte=None):
         off += blen
 
 
-def open_records(path: str, start_byte: int | None = None,
-                 end_byte: int | None = None, size: int | None = None):
-    """(records iterator, split flag) for a capture slice — the shared
-    record walk under iter_packets and the r15 vectorized batch path
-    (native_vec). Yields (off, epoch_us, incl, orig, data, linktype)
-    tuples; `split` tells the consumer whether frame.number is the byte
-    offset (sliced read) or the 1-based ordinal (whole-file read) —
-    the exact rule iter_packets documents below."""
-    fs = filesystem_for(path)
-    if size is None:
-        size = fs.size(path)
-    fh = fs.open(path)
-    pcapng = fh.read(4) == PCAPNG_MAGIC
-    fh.seek(0)
-    if pcapng:
-        records = _iter_pcapng_records(fh, size, start_byte, end_byte)
-    else:
-        records = _iter_classic_records(fh, size, start_byte, end_byte)
-    split = start_byte is not None and (
-        start_byte > GLOBAL_HEADER_LEN
-        or (end_byte is not None and end_byte < size)
-    )
-
-    def gen():
-        try:
-            yield from records
-        finally:
-            fh.close()
-
-    return gen(), split
-
-
 def open_record_batches(path: str, start_byte: int | None = None,
                         end_byte: int | None = None,
                         size: int | None = None,
                         batch_rows: int = 4096):
-    """(iterator of record-tuple LISTS, split flag) — the batched twin
-    of open_records for the vectorized Arrow path (classic captures
-    walk the batched core directly; pcapng batches its per-record
-    iterator)."""
+    """(iterator of columnar record batches, split flag) for a capture
+    slice — the record walk under the vectorized Arrow path (classic
+    captures walk the batched core directly; pcapng batches its
+    per-record iterator). Each batch holds (offsets, epoch_us, incl,
+    orig, data, linktype) columns; `split` tells the consumer whether
+    frame.number is the byte offset (sliced read) or the 1-based ordinal
+    (whole-file read) — the rule iter_packets documents."""
     fs = filesystem_for(path)
     if size is None:
         size = fs.size(path)

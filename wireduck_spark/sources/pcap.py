@@ -38,8 +38,10 @@ cpp:126,180):
 from __future__ import annotations
 
 import glob as globmod
+import hashlib
 import os
 import tempfile
+import weakref
 import zipfile
 from dataclasses import dataclass
 from datetime import datetime, timedelta
@@ -69,15 +71,20 @@ from wireduck_spark.sources.tshark import (
 )
 from wireduck_spark.sources.typemap import cast_cell, map_ft_type
 
-# A single capture file is split into byte-range partitions above this size
-# (native engine only; tshark must stream a whole file).
-SPLIT_THRESHOLD_BYTES = 64 * 1024 * 1024
-# Target bytes per split: the partition count grows with the file, so a
-# 1 TB capture yields ~8k parallel slices (a fixed split COUNT would give
-# 64 GB per task at that size — unrunnable). 128 MB matches the parquet
-# maxPartitionBytes default, the task size Spark schedulers are tuned for.
-TARGET_SPLIT_BYTES = 128 * 1024 * 1024
-MIN_SPLITS = 16
+# The byte-range split rule of both readers (batch and stream), native and
+# split-tshark engines: a capture larger than SPLIT_BYTES is cut into
+# ceil(size / SPLIT_BYTES) slices, one Python task each (the
+# `split_threshold` option overrides it per read). The size is set by the
+# fixed cost of a task, not by the dissect work. Every Python task
+# starts with importlib.invalidate_caches() (pyspark worker_util), which
+# makes each of the 16 zip importers on the worker's path (over the
+# spark-core jar and pyspark.zip) re-parse its archive's central
+# directory in pure Python: 0.15-0.2 s of worker CPU per task, and an
+# empty 32-task job takes 2.9 s against 0.3 s for 3 tasks (local[3],
+# 4 vCPUs). A 32 MiB slice is 1-1.5 s of dissect work, so that cost stays
+# a small share of each task while a 64 MiB capture still spreads over
+# several cores.
+SPLIT_BYTES = 32 * 1024 * 1024
 
 # Rows per Arrow RecordBatch emitted by read() — the Python<->JVM transfer
 # unit (the reference's analogue is DuckDB's 2048-row DataChunk, cpp:176).
@@ -172,6 +179,21 @@ class PcapPartition(InputPartition):
     # threads to iter_packets(size=) so every slice of one plan sees the
     # SAME size even if the capture grows between planning and execution.
     file_size: int | None = None
+
+
+def split_ranges(
+    path: str, size: int, split_bytes: int = SPLIT_BYTES
+) -> list[tuple[int, int]] | None:
+    """The split rule of the batch and the stream reader: the byte ranges
+    one capture of `size` bytes is read in, one task each. None keeps the
+    file whole (size <= split_bytes); a larger file becomes
+    ceil(size / split_bytes) contiguous slices covering
+    [GLOBAL_HEADER_LEN, size), planned from the size alone."""
+    if size <= split_bytes:
+        return None
+    return native.byte_range_partitions(
+        path, -(-size // split_bytes), size=size
+    )
 
 
 class PcapDataSource(DataSource):
@@ -377,8 +399,13 @@ class PcapReader(DataSourceReader):
         )
         self.cfilter = options.get("cfilter") or None
         self.split_threshold = int(
-            options.get("split_threshold", SPLIT_THRESHOLD_BYTES)
+            options.get("split_threshold", SPLIT_BYTES)
         )
+        if self.split_threshold < 1:
+            raise ValueError(
+                f"split_threshold must be a positive byte count, got "
+                f"{self.split_threshold}"
+            )
         engine = options.get("engine", "auto")
         if engine == "auto":
             import shutil
@@ -434,24 +461,21 @@ class PcapReader(DataSourceReader):
             # by format) and pipe a private tshark over it — lifting the
             # reference's one-file-one-process ceiling (cpp:126,180) on the
             # 3000-protocol path.
-            splittable = self.engine in ("native", "tshark")
+            ranges = None
             if (
-                splittable
+                self.engine in ("native", "tshark")
                 and self.climit is None
                 and fs.exists(path)
-                and fs.size(path) > self.split_threshold
             ):
                 size = fs.size(path)
-                n_splits = max(
-                    MIN_SPLITS,
-                    (size + TARGET_SPLIT_BYTES - 1) // TARGET_SPLIT_BYTES,
-                )
-                for start, end in native.byte_range_partitions(
-                    path, n_splits, size=size
-                ):
-                    parts.append(PcapPartition(path, start, end, size))
-            else:
+                ranges = split_ranges(path, size, self.split_threshold)
+            if ranges is None:
                 parts.append(PcapPartition(path))
+            else:
+                parts.extend(
+                    PcapPartition(path, start, end, size)
+                    for start, end in ranges
+                )
         return parts
 
     # -- Execution -----------------------------------------------------------
@@ -569,6 +593,35 @@ class PcapReader(DataSourceReader):
                 yield from batches(remap(lines))
 
 
+def _package_zip(pkg_dir: str, out_dir: str) -> str:
+    """Zip the package's .py files into `out_dir` and return its path.
+
+    The name carries a hash of every file's relative path and bytes, so
+    a zip another checkout (or older code) left in a shared temp dir is
+    never taken for this code, while the same code reuses its zip."""
+    files = []
+    for root, dirs, names in os.walk(pkg_dir):
+        dirs.sort()
+        for fn in sorted(names):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as fh:
+                    files.append((os.path.relpath(full, pkg_dir), fh.read()))
+    digest = hashlib.sha256()
+    for rel, data in files:
+        digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+    zip_path = os.path.join(
+        out_dir, f"wireduck_spark-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, data in files:
+                zf.writestr(os.path.join("wireduck_spark", rel), data)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark) -> None:
     """Make wireduck_spark importable inside Spark's Python workers.
 
@@ -576,43 +629,37 @@ def _ship_package(spark) -> None:
     executor-side workers must be able to `import wireduck_spark` — true
     on a cluster only if the package is distributed. addPyFile ships a
     zip of the package to every executor (works in local mode too, and is
-    exactly how this deploys on a 1000-executor cluster)."""
+    exactly how this deploys on a 1000-executor cluster).
+
+    Once per SparkContext: every addPyFile call appends to the context's
+    include list, which every later Python task is sent, and to the
+    driver's sys.path, even for a zip it already holds."""
     import wireduck_spark
 
-    pkg_dir = os.path.dirname(os.path.abspath(wireduck_spark.__file__))
-    zip_path = os.path.join(
+    sc = spark.sparkContext
+    zip_path = _package_zip(
+        os.path.dirname(os.path.abspath(wireduck_spark.__file__)),
         tempfile.gettempdir(),
-        f"wireduck_spark-{wireduck_spark.__version__}.zip",
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path + ".tmp", "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(
-                            "wireduck_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-        os.replace(zip_path + ".tmp", zip_path)
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # already added in this session
+    if os.path.basename(zip_path) not in sc._python_includes:
+        sc.addPyFile(zip_path)
+
+
+# Sessions the `pcap` source is registered on. Weak, so a stopped session
+# drops out and a new one registers afresh.
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
 
 
 def register(spark) -> None:
-    """Idempotently register the `pcap` data source on a session."""
+    """Register the `pcap` data source on a session. read_pcap calls this
+    on every read; only the first call per session does the work."""
+    if spark in _REGISTERED:
+        return
     _ship_package(spark)
-    try:
-        # required for PcapReader.pushFilters to be honored
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    try:
-        spark.dataSource.register(PcapDataSource)
-    except Exception:
-        pass  # already registered
+    # required for PcapReader.pushFilters to be honored
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(PcapDataSource)
+    _REGISTERED.add(spark)
 
 
 def read_pcap(

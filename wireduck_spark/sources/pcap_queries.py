@@ -147,8 +147,8 @@ if _have_fixture():
            bench=True)
     def pcap_throughput_split(spark: SparkSession, sf: str) -> DataFrame:
         """Scan throughput probe: a 200k-packet (~21 MB) capture read with
-        byte-range splitting forced (split_threshold=2 MB -> 16 parallel
-        slices), aggregated per port. This is the 100-TB plan shape — many
+        byte-range splitting forced (split_threshold=2 MB -> ceil(size /
+        2 MB) = 11 parallel slices), aggregated per port. This is the 100-TB plan shape — many
         executors each dissecting a byte range of one large capture — and
         the bench entry that tracks dissector + Arrow-emission speed
         (round-1 VERDICT asked for exactly this datapoint)."""

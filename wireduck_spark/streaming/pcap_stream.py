@@ -12,9 +12,9 @@ lands):
   `latestOffset()` only globs the directory (driver cost: one listing);
   no capture bytes are read on the driver.
 - `partitions(start, end)` turns each newly-appeared file into one input
-  partition — or MANY byte-range partitions for large captures, reusing
-  the batch source's split plan — so dissection runs on EXECUTORS with
-  the same columnar Arrow emission as the batch reader.
+  partition — or MANY byte-range partitions for large captures, by the
+  batch source's split rule (`pcap.split_ranges`) — so dissection runs
+  on EXECUTORS with the same columnar Arrow emission as the batch reader.
 - Sizes are frozen into the offset, so a micro-batch replayed after a
   failure re-reads exactly the same byte ranges even if a capture file
   grew in between (the reason `byte_range_partitions` takes `size=`).
@@ -44,13 +44,7 @@ from pyspark.sql.types import (
 )
 
 from wireduck_spark.sources.glossary import fetch_selected_fields
-from wireduck_spark.sources.native import byte_range_partitions
-from wireduck_spark.sources.pcap import (
-    MIN_SPLITS,
-    SPLIT_THRESHOLD_BYTES,
-    TARGET_SPLIT_BYTES,
-    native_arrow_batches,
-)
+from wireduck_spark.sources.pcap import native_arrow_batches, split_ranges
 from wireduck_spark.sources.typemap import map_ft_type
 
 
@@ -121,15 +115,11 @@ class PcapStreamReader(DataSourceStreamReader):
         parts: list[PcapStreamPartition] = []
         for path in sorted(set(upto) - set(done)):
             size = upto[path]
-            if size > SPLIT_THRESHOLD_BYTES:
-                n_splits = max(
-                    MIN_SPLITS,
-                    (size + TARGET_SPLIT_BYTES - 1) // TARGET_SPLIT_BYTES,
-                )
-                for s, e in byte_range_partitions(path, n_splits, size=size):
-                    parts.append(PcapStreamPartition(path, s, e, size))
-            else:
-                parts.append(PcapStreamPartition(path, 0, size, size))
+            ranges = split_ranges(path, size) or [(0, size)]
+            parts.extend(
+                PcapStreamPartition(path, start, end, size)
+                for start, end in ranges
+            )
         return parts
 
     # -- Execution (executor-side) ------------------------------------------
