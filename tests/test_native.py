@@ -897,7 +897,9 @@ def test_pcapng_unsplit_fallback_tiny_slices_no_duplication(tmp_path):
     assert got == whole  # exactly once — no preamble-straddling dupes
 
     # extract_pcapng_slice twin: only the first slice materializes rows
-    from wireduck_spark.sources.native import extract_pcapng_slice
+    from wireduck_spark.sources.native import (
+        extract_slice as extract_pcapng_slice,
+    )
     owned = []
     for i, (s, e) in enumerate(parts):
         out = tmp_path / f"slice_{i}.pcapng"
@@ -941,12 +943,85 @@ def test_pcapng_unsplit_read_skips_oversized_block(tmp_path, monkeypatch):
     assert ports2 == [4000]
 
     # extract twin: the skipped block is not copied, both EPBs are
-    from wireduck_spark.sources.native import extract_pcapng_slice
+    from wireduck_spark.sources.native import (
+        extract_slice as extract_pcapng_slice,
+    )
     out = tmp_path / "giant_slice.pcapng"
     offs = extract_pcapng_slice(str(p), None, None, str(out))
     assert len(offs) == 2
     ports3 = [x["udp.srcport"] for x in iter_packets(str(out))]
     assert ports3 == [4000, 4001]
+
+
+def test_chunk_edges_keep_every_record(tmp_path):
+    """~9 MiB captures cross the record walk's 4 MiB read edges, with a
+    record (classic) or block (pcapng) cut by every edge and, in the
+    pcapng file, a second SHB section after the first edge. The whole
+    read, the union of a 3-slice read, and the extract_slice files of
+    the whole file and of each slice read back must all return exactly
+    the written records."""
+    from bisect import bisect_right
+
+    import wireduck_spark.sources.native as native
+
+    # 50,000-byte frames: neither a 50,016-byte record nor a 50,032-byte
+    # EPB divides 4 MiB, so the edges land inside records
+    frames = [
+        (1_700_000_000 + i / 8,
+         build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 1000 + i, 9,
+                            bytes([i % 251]) * 49_958))
+        for i in range(190)
+    ]
+    want = [(round(ts * 1_000_000), len(f), f) for ts, f in frames]
+    classic = tmp_path / "edges.pcap"
+    classic.write_bytes(build_pcap(frames))
+    png = tmp_path / "edges.pcapng"
+    section1 = build_pcapng(frames[:100])
+    png.write_bytes(section1 + build_pcapng(frames[100:]))
+    assert native._CHUNK < len(section1) < 2 * native._CHUNK
+
+    def rows(path, start=None, end=None):
+        batches, _ = native.open_record_batches(str(path), start, end)
+        return [r for b in batches for r in zip(b[1], b[3], b[4])]
+
+    def offsets(path, start=None, end=None):
+        batches, _ = native.open_record_batches(str(path), start, end)
+        return [o for b in batches for o in b[0]]
+
+    for path, head in ((classic, 24), (png, 0)):
+        blob = path.read_bytes()
+        size = len(blob)
+        assert 8 << 20 < size < 10 << 20
+        # every block start, and the edges the walk reads up to: each
+        # read runs _CHUNK bytes from the start of the block the
+        # previous read cut
+        if path is classic:
+            starts = [24 + i * (16 + len(f)) for i, (_, f) in
+                      enumerate(frames)]
+        else:
+            starts, off = [], 0
+            while off < size:
+                starts.append(off)
+                off += int.from_bytes(blob[off + 4:off + 8], "little")
+        edge = head + native._CHUNK
+        while edge < size:
+            cut = starts[bisect_right(starts, edge) - 1]
+            assert cut < edge, (path.name, edge)
+            edge = cut + native._CHUNK
+
+        assert rows(path) == want, path.name
+        parts = byte_range_partitions(str(path), 3)
+        assert len(parts) == 3
+        assert [r for s, e in parts for r in rows(path, s, e)] == want
+        # each slice is shorter than one read, so the whole-file extract
+        # is the one that copies across the edges
+        extracted = []
+        for i, (s, e) in enumerate([(None, None)] + parts):
+            out = tmp_path / f"{path.name}.{i}"
+            assert native.extract_slice(str(path), s, e, str(out)) \
+                == offsets(path, s, e)
+            extracted += rows(out)
+        assert extracted == want + want, path.name
 
 
 def test_dns_name_depth_exhaustion_advances_past_pointer():

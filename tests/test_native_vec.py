@@ -23,7 +23,8 @@ from tests.pcap_fixtures import (
     build_pcapng,
     dns_query_payload,
 )
-from wireduck_spark.sources import native
+from tests.test_native import FIXTURE
+from wireduck_spark.sources import native, synth
 from wireduck_spark.sources.pcap import (
     ARROW_BATCH_ROWS,
     PcapDataSource,
@@ -75,27 +76,46 @@ def _pydicts(batches):
     return [b.to_pydict() for b in batches]
 
 
-def _all_captures():
-    caps = ["/root/reference/fix.pcap"]
-    if os.path.isdir(CACHE):
-        for root, _dirs, files in os.walk(CACHE):
-            for f in sorted(files):
-                if f.endswith(".pcap"):
-                    caps.append(os.path.join(root, f))
-    # the 200k-row throughput capture is covered by the split/limit
-    # tests below with a row cap; drop it from the full sweep for time
-    return [c for c in caps if "throughput" not in c]
+def _all_captures(tmp_path, monkeypatch):
+    """Every synth `*_capture` function's output plus a pcapng twin of the
+    same frames, and the reference fix.pcap when it is present. The
+    200k-row throughput capture is covered by the split/limit test below
+    with a row cap; it is left out of the full sweep for time."""
+    frames_of = {}
+    write_pcap = synth.write_pcap
+
+    def record(path, frames):
+        frames_of[path] = frames
+        return write_pcap(path, frames)
+
+    monkeypatch.setattr(synth, "write_pcap", record)
+    caps = []
+    for name in sorted(dir(synth)):
+        if not name.endswith("_capture") or name == "throughput_capture":
+            continue
+        path = getattr(synth, name)(str(tmp_path / f"{name}.pcap"))
+        twin = path + "ng"
+        with open(twin, "wb") as fh:
+            fh.write(build_pcapng(frames_of[path]))
+        caps += [path, twin]
+    if os.path.exists(FIXTURE):
+        caps.append(FIXTURE)
+    return caps
 
 
 @pytest.mark.parametrize("proto_opt", ["all", "tcp"])
-def test_vec_matches_dict_path_on_every_capture(proto_opt):
-    for cap in _all_captures():
+def test_vec_matches_dict_path_on_every_capture(proto_opt, tmp_path,
+                                                monkeypatch):
+    for cap in _all_captures(tmp_path, monkeypatch):
         ds = PcapDataSource({"path": cap, "engine": "native",
                              "protocols": proto_opt})
         schema = ds.schema()
-        got = _pydicts(native_arrow_batches(schema, cap))
-        want = _pydicts(dict_path_batches(schema, cap))
-        assert got == want, f"{os.path.basename(cap)} ({proto_opt})"
+        size = os.path.getsize(cap)
+        for a, b in ((None, None), (24, size // 2), (size // 2, size)):
+            got = _pydicts(native_arrow_batches(schema, cap, a, b))
+            want = _pydicts(dict_path_batches(schema, cap, a, b))
+            assert got == want, \
+                f"{os.path.basename(cap)} ({proto_opt}) [{a}:{b}]"
 
 
 def test_vec_matches_dict_path_split_and_limit():
@@ -118,8 +138,8 @@ def test_vec_matches_dict_path_split_and_limit():
 
 
 def test_vec_matches_dict_path_pcapng(tmp_path):
-    # pcapng batches through open_record_batches' per-record branch;
-    # mixes fast-path TCP, header-only UDP and a fallback (DNS) row
+    # pcapng through the same batched record walk as classic; mixes
+    # fast-path TCP, header-only UDP and a fallback (DNS) row
     frames = [
         build_eth_ipv4_tcp("10.0.0.1", "10.0.0.2", 40000, 80, 1, 0,
                            0x18, b"GET / HTTP/1.1\r\nHost: x\r\n\r\n"),

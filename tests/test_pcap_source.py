@@ -258,7 +258,8 @@ def test_extract_classic_slice_is_standalone(tmp_path):
     (byte-identical records, original header preserved), offsets are the
     records' original byte positions."""
     from wireduck_spark.sources.native import (
-        byte_range_partitions, extract_classic_slice, iter_packets,
+        byte_range_partitions, extract_slice as extract_classic_slice,
+        iter_packets,
     )
     from tests.pcap_fixtures import build_eth_ipv4_tcp, build_pcap
 
@@ -333,7 +334,8 @@ def test_extract_pcapng_slice_is_standalone(tmp_path):
     alone; packet-block offsets are returned in order. Also exercises
     SPB-only captures and mid-file filler blocks (NRB runs)."""
     from wireduck_spark.sources.native import (
-        byte_range_partitions, extract_pcapng_slice, iter_packets,
+        byte_range_partitions, extract_slice as extract_pcapng_slice,
+        iter_packets,
     )
     from tests.pcap_fixtures import build_eth_ipv4_tcp, build_pcapng
 

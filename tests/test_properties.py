@@ -181,7 +181,8 @@ def test_slice_extraction_union_equals_whole_file(payloads, n_slices, png):
     import tempfile
 
     from wireduck_spark.sources.native import (
-        extract_classic_slice, extract_pcapng_slice,
+        extract_slice as extract_classic_slice,
+        extract_slice as extract_pcapng_slice,
     )
     from tests.pcap_fixtures import (
         build_eth_ipv4_tcp, build_pcap, build_pcapng,

@@ -13,14 +13,23 @@ columns directly; only genuinely row-wise work stays per packet:
 - TCP payload rows: payload hex + the L7 probe chain (native._tcp_l7 —
   the exact chain _dissect_l4 runs) + the info string,
 - TCP rows with options (data_off > 20): native._tcp_options,
+- UDP payload rows: the shared probe chain (native._udp_payload_chain)
+  on a fresh per-row dict,
 - flow ids: cached per 4-tuple (native.stream_id on cache miss),
 - everything off the proven fast path (VLAN, IPv6, ARP, non-TCP/UDP IP
-  protocols, UDP with payload — whose probe chain can decapsulate
-  VXLAN/GTP and rewrite arbitrary columns, other linktypes): the row
-  falls back to native.dissect_packet and overwrites its cells, so the
-  output is bit-identical to the dict path BY CONSTRUCTION for every
-  row class (pinned by tests/test_native_vec.py's full differential
-  over every fixture capture).
+  protocols, other linktypes, and the UDP payload rows that could hit
+  the VXLAN (dport 4789) or GTP (port 2152) decap branches, which
+  rewrite other layers' columns): the row falls back to
+  native.dissect_packet and overwrites its cells, so the output is
+  bit-identical to the dict path BY CONSTRUCTION for every row class
+  (pinned by tests/test_native_vec.py's full differential over every
+  fixture capture).
+
+The UDP payload rows that stay on the fast path are only correct
+because no other _udp_payload_chain branch reads an earlier layer's
+fields: the chain sees a fresh dict there, not the row's dissected
+L2-L4 fields. A new branch that reads or rewrites another layer's
+fields must add its ports to ``udp_fb`` in batch_columns.
 
 The fast path intentionally covers exactly the traffic that dominates
 big captures (plain Ethernet II / IPv4 / TCP, and header-only UDP);
@@ -43,14 +52,6 @@ from wireduck_spark.sources.native import (
     dissect_packet,
     stream_id,
 )
-
-# UDP rows whose probe chain may rewrite non-UDP columns (VXLAN decap
-# rewrites ip.*/tcp.*; GTP decap extends the protocol chain) — these
-# ports force the full-row fallback even though the generic UDP-payload
-# rule already routes every payload-carrying UDP row there. Kept
-# explicit as documentation of WHY payload rows cannot ride the fast
-# path.
-_UDP_REWRITE_PORTS = (4789, 2152)
 
 # IPv4 protocol numbers _dissect_l4 handles beyond TCP/UDP — rows with
 # these fall back to the dict path; every other protocol number is the
@@ -170,9 +171,12 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
     # a UDP payload slice is non-empty iff the length field says there
     # is payload AND the capture actually holds bytes past the header
     udp_has_pay = udp_m & (ulen > 8) & (lens > l4off + 8)
-    # rows that could hit the VXLAN/GTP decap branches (which rewrite
-    # other layers' fields) take the full fallback; every other
-    # payload row runs the shared _udp_payload_chain per packet
+    # only rows that could hit the VXLAN/GTP decap branches (which read
+    # and rewrite other layers' fields) take the full fallback; every
+    # other payload row runs the shared _udp_payload_chain per packet
+    # on a fresh dict, which is right only while no other branch reads
+    # an earlier layer's fields — a new cross-layer branch must extend
+    # this mask
     udp_fb = udp_has_pay & (
         (udport == 4789) | (usport == 2152) | (udport == 2152))
     udp_fast = udp_m & ~udp_fb
@@ -410,6 +414,3 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
             out[nm] = lists[nm]
     return out
 
-
-def _have_numpy() -> bool:  # seam for tests
-    return True
