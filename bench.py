@@ -132,10 +132,9 @@ def main() -> None:
         from wireduck_spark.sources.pcap import read_pcap
         from wireduck_spark.sources.synth import throughput_capture
 
-        throughput_capture(os.path.join(cache_dir(), "synth",
-                                        "throughput.pcap"))
-        read_pcap(spark, "/root/reference/fix.pcap", engine="native",
-                  climit=1).count()
+        cap = throughput_capture(os.path.join(cache_dir(), "synth",
+                                              "throughput.pcap"))
+        read_pcap(spark, cap, engine="native", climit=1).count()
 
     load_before = [round(x, 2) for x in os.getloadavg()]
     timings: dict[str, float] = {}

@@ -7,9 +7,12 @@ order-sensitive — twice and require identical multisets."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from wireduck_spark.registry import load_all_queries
+from wireduck_spark.sources.pcap_queries import FIXTURE
 
 QUERIES = load_all_queries()
 
@@ -56,7 +59,11 @@ NAMES = [
     "stats_kendall_tau_weekly",
     "stats_granger_lagged_daily",
     "text_burstiness_vmr",
-    "pcap_flow_export_sink",
+    pytest.param(
+        "pcap_flow_export_sink",
+        marks=pytest.mark.skipif(not os.path.exists(FIXTURE),
+                                 reason="fixture not present"),
+    ),
     "quality_benford_first_digit",
     "stats_cramers_v_source_lang",
     "stats_weekday_effect_anova",

@@ -1,5 +1,7 @@
 """Driver-contract smoke: entry(), queries()/oracle_sql() gate shape."""
 
+import os
+
 import pytest
 
 import __spark_entry__ as contract
@@ -10,6 +12,7 @@ from wireduck_spark.registry import (
     ROTATED_OUT,
     load_all_queries,
 )
+from wireduck_spark.sources.pcap_queries import FIXTURE, FIXTURE_QUERIES
 
 load_all_queries()
 
@@ -84,6 +87,11 @@ def test_gate_partition():
     missing = set(QUERIES) - gate - rotated - pending
     assert not missing, f"unplaced queries: {sorted(missing)}"
     stale = (gate | rotated | pending) - set(QUERIES)
+    if not os.path.exists(FIXTURE):
+        # the queries that read fix.pcap register only where it exists;
+        # they stay placed so the gate is the same on every box
+        assert set(FIXTURE_QUERIES) <= gate | rotated | pending
+        stale -= set(FIXTURE_QUERIES)
     assert not stale, f"gate lists unknown queries: {sorted(stale)}"
 
 

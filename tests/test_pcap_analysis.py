@@ -16,8 +16,12 @@ import pytest
 
 from wireduck_spark.registry import load_all_queries
 from wireduck_spark.sources.native import stream_id
+from wireduck_spark.sources.pcap_queries import FIXTURE
 
 SF = "/root/testdata/sf0.001"
+
+needs_fixture = pytest.mark.skipif(not os.path.exists(FIXTURE),
+                                   reason="fixture not present")
 
 STREAM_A = stream_id("10.0.1.1", 40001, "10.0.2.1", 80)
 STREAM_B = stream_id("10.0.1.2", 40002, "10.0.2.1", 443)
@@ -279,6 +283,7 @@ def test_traceroute_path_golden(spark, queries):
     assert all(r["client"] == "10.0.5.1" for r in rows)
 
 
+@needs_fixture
 def test_capture_summary_golden(spark, queries):
     """capinfos parity on the reference fixture: 485 packets, 44.7 s span
     starting 2015-11-28 17:59:35 UTC (SURVEY.md 5.1 characterization)."""
@@ -321,6 +326,7 @@ def test_ipv6_traffic_golden(spark, queries):
     assert len(rows) == 3
 
 
+@needs_fixture
 def test_pcap_lake_federation_goldens(spark, sf_dir):
     """Capture x parquet-dim federation: the per-service rollup must
     reproduce the flagship port-pair goldens through the broadcast join
@@ -336,6 +342,7 @@ def test_pcap_lake_federation_goldens(spark, sf_dir):
     assert rows["fix-client"] == (56, 19702)
 
 
+@needs_fixture
 def test_pcap_capture_compare_goldens(spark, sf_dir):
     """Capture diff through the pcap sink: the data-only rewrite must
     drop exactly the zero-length segments of each direction of the
@@ -352,6 +359,7 @@ def test_pcap_capture_compare_goldens(spark, sf_dir):
     assert rows[(53867, 11001)] == (56, 5, "changed")
 
 
+@needs_fixture
 def test_pcap_flowlet_split_goldens(spark, sf_dir):
     """fix.pcap's one TCP stream must split into exactly 5 flowlets at
     the 5 s inactivity timeout, packets summing to the capture's 485,
@@ -368,6 +376,7 @@ def test_pcap_flowlet_split_goldens(spark, sf_dir):
     assert rows[1] == (2, 450, 273199)
 
 
+@needs_fixture
 def test_pcap_syn_options_goldens(spark, sf_dir):
     """fix.pcap's two loopback SYNs must surface MSS 65495 with window
     scales 7 (client) and 2 (server), both SACK-permitted."""
@@ -543,6 +552,7 @@ def test_dhcp_lease_inventory_goldens(spark, sf_dir):
     }
 
 
+@needs_fixture
 def test_flow_export_sink_golden(spark, queries):
     """The exported flow table must reproduce the reference README's
     fix.pcap goldens (429 pkts / 259678 payload bytes one direction,
@@ -562,6 +572,7 @@ def test_flow_export_sink_golden(spark, queries):
         assert r["first_seen"] <= r["last_seen"]
 
 
+@needs_fixture
 def test_flow_import_talkers_golden(spark, queries):
     """The flow-lake IMPORT query must fold the exported table's two
     directional flows into one loopback-host row whose counters equal
@@ -633,6 +644,7 @@ def test_scratch_dir_reaps_dead_owners_only(tmp_path, monkeypatch):
     assert other.exists(), "other-prefix dirs must never be touched"
 
 
+@needs_fixture
 def test_flow_lake_recurring_dst_golden(spark, queries):
     """The multi-capture flow lake must surface EXACTLY the two
     destinations present in more than one capture: the benign client

@@ -7,14 +7,19 @@ so `frame.protocols` is the tshark path's transport-level prefix)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from wireduck_spark.sources.glossary import DEFAULT_FIELDS
 from wireduck_spark.sources.pcap import read_pcap
 
 FIXTURE = "/root/reference/fix.pcap"
+needs_fixture = pytest.mark.skipif(not os.path.exists(FIXTURE),
+                                   reason="fixture not present")
 
 
+@needs_fixture
 def test_default_scan_readme_l45(spark):
     """README.md:45 — `select * from read_pcap('fix.pcap') limit 10`:
     5 default columns in the reference's order; the printed
@@ -36,6 +41,7 @@ def test_default_scan_readme_l45(spark):
     assert "11001" in rows[0]["_ws.col.info"]
 
 
+@needs_fixture
 def test_climit_readme_l67(spark):
     """README.md:67 — `read_pcap('fix.pcap', climit:=4)`: exactly 4
     packets scanned."""
@@ -43,6 +49,7 @@ def test_climit_readme_l67(spark):
     assert df.count() == 4
 
 
+@needs_fixture
 def test_protocols_schema_readme_l100(spark):
     """README.md:100/116 — `read_pcap('fix.pcap', protocols:=['udp'],
     climit:=4)`: the schema widens to the udp glossary columns (the
@@ -57,6 +64,7 @@ def test_protocols_schema_readme_l100(spark):
     assert df.count() == 4
 
 
+@needs_fixture
 def test_flagship_aggregate_readme_l160(spark):
     """README.md:160 — the flagship group-by: count + sum(tcp.len) per
     (srcport, dstport); the reference prints (429, 259678) and

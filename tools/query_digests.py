@@ -11,7 +11,10 @@ make it mechanical.
 Digest = sha256 over the query's builder-function source (via
 ``inspect.getsource``, which includes the ``@query(...)`` decorator block
 and therefore the oracle literal) concatenated with the registered oracle
-text (belt and braces for oracles built from shared constants).
+text (belt and braces for oracles built from shared constants). The
+source is passed through ``textwrap.dedent`` first, so a builder that
+moves between module level and a nested block (an ``if`` guard) keeps
+its digest; only an edit to its text changes it.
 
 Snapshot protocol (one file, ``tools/query_digests_prev.json``):
 
@@ -36,6 +39,7 @@ import inspect
 import json
 import os
 import re
+import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SNAPSHOT_PATH = os.path.join(REPO, "tools", "query_digests_prev.json")
@@ -50,7 +54,7 @@ def compute_digests() -> dict[str, str]:
 
     out = {}
     for name, spec in sorted(load_all_queries().items()):
-        src = inspect.getsource(spec.fn)
+        src = textwrap.dedent(inspect.getsource(spec.fn))
         payload = src + "\n@@ORACLE@@\n" + (spec.oracle or "")
         out[name] = hashlib.sha256(payload.encode("utf-8")).hexdigest()
     return out

@@ -229,10 +229,17 @@ GATE: tuple[str, ...] = (
     "io_zorder_clustered_write",
     "graph_pagerank_bipartite",
     "graph_degree_stats",
-    "dedup_paragraph_exact",
+    # -- changed implementation since the r15 snapshot: the docstring
+    #    now states the ceil(size / 2 MB) = 11 slices the split rule
+    #    gives (was 16). It takes dedup_paragraph_exact's slot, the last
+    #    of the round-6 cohort front, so GATE stays at the 50-slot budget.
+    "pcap_throughput_split",
 )
 
 ROTATED_OUT: tuple[str, ...] = (
+    # -- round-15 GATE green rotated out for pcap_throughput_split's
+    #    re-check (hash-exact, 500 rows, in CORRECTNESS_r15.json):
+    "dedup_paragraph_exact",
     # -- round-14 GATE rotated out in r15: 49 hash-exact rows +
     #    sim_ann_pq_rerank's documented no_oracle artifact row in
     #    CORRECTNESS_r14.json; still verified by tools/check_oracle.py
@@ -502,7 +509,6 @@ ROTATED_OUT: tuple[str, ...] = (
     "io_xml_roundtrip",
     "curation_quantile_normalize",
     "pcap_flagship_portpair",
-    "pcap_throughput_split",
     # -- round-7 GATE, all 48 green in CORRECTNESS_r07.json (zero red):
     "embed_mean_pool",
     "agg_pareto_concentration",

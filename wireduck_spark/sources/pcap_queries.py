@@ -4,6 +4,11 @@ DuckDB cannot read pcap, so these are rows-only entries in the driver's
 correctness gate (SURVEY.md §2 marks the pcap scan rows-only); the exact
 golden values from the reference README (429/259678 + 56/19702 on
 fix.pcap) are asserted in tests/test_pcap_source.py instead.
+
+Only the FIXTURE_QUERIES read the reference capture ``fix.pcap``
+(FIXTURE); they are registered only where that file exists. Every other
+query here reads captures that ``sources/synth.py`` builds on first use,
+so it registers everywhere.
 """
 
 from __future__ import annotations
@@ -17,10 +22,19 @@ from wireduck_spark.registry import query, ts_str
 from wireduck_spark.sources.pcap import read_pcap
 
 FIXTURE = "/root/reference/fix.pcap"
-
-
-def _have_fixture() -> bool:
-    return os.path.exists(FIXTURE)
+FIXTURE_QUERIES: tuple[str, ...] = (
+    "pcap_scan_default",
+    "pcap_flagship_portpair",
+    "pcap_flow_stats",
+    "pcap_capture_summary",
+    "pcap_lake_federation",
+    "pcap_capture_compare",
+    "pcap_flowlet_split",
+    "pcap_syn_options_audit",
+    "pcap_flow_export_sink",
+    "pcap_flow_import_talkers",  # reads pcap_flow_export_sink's output
+    "pcap_flow_lake_recurring_dst",
+)
 
 
 def _scratch_dir(prefix: str, max_age_sec: int = 6 * 3600) -> str:
@@ -81,7 +95,1128 @@ def _scratch_dir(prefix: str, max_age_sec: int = 6 * 3600) -> str:
     return tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_")
 
 
-if _have_fixture():
+@query("pcap_dns_http_dissect", oracle=None, tags=("pcap", "dissect"))
+def pcap_dns_http_dissect(spark: SparkSession, sf: str) -> DataFrame:
+    """Deep-protocol dissection without tshark (round-1 VERDICT gap #1):
+    DNS query names + HTTP methods/codes from the native dissector over
+    a deterministic synthetic capture (sources/synth.py). The reference
+    needs tshark for any of these columns (wireduck_extension.cpp:109).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import multiproto_capture
+
+    cap = multiproto_capture(
+        os.path.join(cache_dir(), "synth", "multiproto.pcap")
+    )
+    df = read_pcap(spark, cap, protocols=["dns", "http", "icmp", "arp"],
+                   engine="native")
+    return (
+        df.groupBy(
+            F.col("`dns.qry.name`").alias("qry_name"),
+            F.col("`http.request.method`").alias("http_method"),
+            F.col("`http.response.code`").alias("http_code"),
+            F.col("`icmp.type`").alias("icmp_type"),
+            F.col("`arp.opcode`").alias("arp_op"),
+        )
+        .agg(F.count("*").alias("n"))
+    )
+
+
+@query("pcap_throughput_split", oracle=None, tags=("pcap", "scan"),
+       bench=True)
+def pcap_throughput_split(spark: SparkSession, sf: str) -> DataFrame:
+    """Scan throughput probe: a 200k-packet (~21 MB) capture read with
+    byte-range splitting forced (split_threshold=2 MB -> ceil(size /
+    2 MB) = 11 parallel slices), aggregated per port. This is the 100-TB plan shape — many
+    executors each dissecting a byte range of one large capture — and
+    the bench entry that tracks dissector + Arrow-emission speed
+    (round-1 VERDICT asked for exactly this datapoint)."""
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.pcap import register
+    from wireduck_spark.sources.synth import throughput_capture
+
+    register(spark)
+    cap = throughput_capture(
+        os.path.join(cache_dir(), "synth", "throughput.pcap")
+    )
+    df = (
+        spark.read.format("pcap")
+        .option("engine", "native")
+        .option("protocols", "tcp")
+        .option("split_threshold", str(2 * 1024 * 1024))
+        .load(cap)
+    )
+    return (
+        df.filter(F.col("`tcp.srcport`").isNotNull())
+        .groupBy(F.col("`tcp.srcport`").alias("srcport"))
+        .agg(
+            F.count("*").alias("n_packets"),
+            F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
+        )
+    )
+
+
+@query("pcap_tls_sni", oracle=None, tags=("pcap", "dissect"))
+def pcap_tls_sni(spark: SparkSession, sf: str) -> DataFrame:
+    """TLS visibility without tshark: SNI host names + handshake
+    types/versions from the record-layer dissector over a synthetic
+    handshake capture — the join key of flow-to-domain analytics."""
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import tls_capture
+
+    cap = tls_capture(os.path.join(cache_dir(), "synth", "tls.pcap"))
+    df = read_pcap(spark, cap, protocols=["tls"], engine="native")
+    return (
+        df.filter(F.col("`tls.record.content_type`").isNotNull())
+        .groupBy(
+            F.col("`tls.handshake.extensions_server_name`").alias("sni"),
+            F.col("`tls.handshake.type`").alias("hs_type"),
+            F.col("`tls.record.content_type`").alias("rec_type"),
+        )
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def _session_cap() -> str:
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import session_capture
+
+    return session_capture(
+        os.path.join(cache_dir(), "synth", "session.pcap")
+    )
+
+
+@query("pcap_tcp_handshake_rtt", oracle=None,
+       tags=("pcap", "analysis"))
+def pcap_tcp_handshake_rtt(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-connection SYN -> SYN-ACK round-trip time (Wireshark's
+    tcp.analysis.initial_rtt, reachable in the reference only through
+    tshark's analysis columns). The handshake filter (`tcp.flags.syn`)
+    runs BEFORE the per-stream shuffle, so only the two handshake
+    packets of each connection move — at 100 TB that is ~2 rows per
+    flow, not the flow's payload. RTT is exact integer microseconds
+    (unix_micros on both conditional mins); connections whose
+    handshake was not captured simply have no row.
+    """
+    t = read_pcap(spark, _session_cap(), protocols=["tcp"],
+                  engine="native")
+    syn_pkts = t.filter(F.col("`tcp.flags.syn`"))
+    us = F.unix_micros(F.col("`frame.time_epoch`"))
+    is_synack = F.col("`tcp.flags.ack`")
+    agg = syn_pkts.groupBy(F.col("`tcp.stream`").alias("stream")).agg(
+        F.min(F.when(~is_synack, us)).alias("syn_us"),
+        F.min(F.when(is_synack, us)).alias("synack_us"),
+    )
+    return agg.filter(
+        F.col("syn_us").isNotNull() & F.col("synack_us").isNotNull()
+    ).select(
+        "stream",
+        (F.col("synack_us") - F.col("syn_us")).cast("bigint")
+        .alias("rtt_us"),
+    )
+
+
+@query("pcap_tcp_retransmissions", oracle=None,
+       tags=("pcap", "analysis"))
+def pcap_tcp_retransmissions(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-stream retransmission counts (tcp.analysis.retransmission):
+    a data-bearing segment whose (direction, sequence number, length)
+    was already seen is a retransmit. Two-level aggregate — the first
+    groupBy collapses duplicate segments map-side (partial agg), so
+    the second per-stream pass sees one row per distinct segment, not
+    per packet; both shuffles are keyed on the stream prefix.
+    """
+    t = read_pcap(spark, _session_cap(), protocols=["tcp"],
+                  engine="native")
+    segs = (
+        t.filter(F.col("`tcp.len`") > 0)
+        .groupBy(
+            F.col("`tcp.stream`").alias("stream"),
+            # direction within a stream == the (sport, dport)
+            # orientation of its canonical endpoint pair
+            F.col("`tcp.srcport`").alias("sport"),
+            F.col("`tcp.dstport`").alias("dport"),
+            F.col("`tcp.seq`").alias("seq"),
+            F.col("`tcp.len`").alias("seg_len"),
+        )
+        .agg(F.count("*").alias("n_seen"))
+    )
+    return segs.groupBy("stream").agg(
+        F.sum("n_seen").cast("bigint").alias("data_segments"),
+        F.sum(F.col("n_seen") - 1).cast("bigint")
+        .alias("retransmissions"),
+    )
+
+
+@query("pcap_protocol_hierarchy", oracle=None,
+       tags=("pcap", "analysis"))
+def pcap_protocol_hierarchy(spark: SparkSession, sf: str) -> DataFrame:
+    """Wireshark's 'Protocol Hierarchy Statistics': every frame counts
+    once at each level of its frame.protocols path (eth, eth:ip,
+    eth:ip:udp:dns, ...). The prefix expansion is a narrow
+    posexplode (path depth <= ~6, so fan-out is bounded), followed by
+    one keyed aggregate — no joins, no windows.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import multiproto_capture
+
+    cap = multiproto_capture(
+        os.path.join(cache_dir(), "synth", "multiproto.pcap")
+    )
+    df = read_pcap(spark, cap, engine="native")
+    parts = F.split(F.col("`frame.protocols`"), ":")
+    exploded = df.select(
+        F.col("`frame.len`").alias("frame_len"),
+        parts.alias("parts"),
+        F.posexplode(parts).alias("depth", "proto"),
+    )
+    prefix = F.array_join(
+        F.slice(F.col("parts"), 1, F.col("depth") + 1), ":"
+    )
+    return (
+        exploded.select(prefix.alias("proto_path"), "frame_len")
+        .groupBy("proto_path")
+        .agg(
+            F.count("*").alias("n_frames"),
+            F.sum("frame_len").cast("bigint").alias("total_bytes"),
+        )
+    )
+
+
+@query("pcap_dns_latency", oracle=None, tags=("pcap", "analysis"))
+def pcap_dns_latency(spark: SparkSession, sf: str) -> DataFrame:
+    """DNS transaction latency: match each query to its response on
+    (udp.stream, dns.id) — udp.stream is direction-agnostic by
+    construction (sorted endpoint pair, native.py stream_id), so both
+    halves of a transaction share the key and the match is a single
+    keyed aggregate, not a self-join. Unanswered queries surface with
+    NULL latency (the monitoring signal); latency is exact integer
+    microseconds.
+    """
+    t = read_pcap(spark, _session_cap(), protocols=["udp", "dns"],
+                  engine="native")
+    us = F.unix_micros(F.col("`frame.time_epoch`"))
+    is_resp = F.col("`dns.flags.response`")
+    return (
+        t.filter(F.col("`dns.id`").isNotNull())
+        .groupBy(
+            F.col("`udp.stream`").alias("stream"),
+            F.col("`dns.id`").alias("dns_id"),
+            F.col("`dns.qry.name`").alias("qry_name"),
+        )
+        .agg(
+            F.min(F.when(~is_resp, us)).alias("query_us"),
+            F.min(F.when(is_resp, us)).alias("resp_us"),
+            F.max(F.when(is_resp, F.col("`dns.count.answers`")))
+            .alias("n_answers"),
+        )
+        .select(
+            "stream", "dns_id", "qry_name", "n_answers",
+            (F.col("resp_us") - F.col("query_us")).cast("bigint")
+            .alias("latency_us"),
+        )
+    )
+
+
+@query("pcap_beacon_detection", oracle=None, tags=("pcap", "analysis"))
+def pcap_beacon_detection(spark: SparkSession, sf: str) -> DataFrame:
+    """Beacon hunting in the packet domain: flows whose inter-packet
+    gaps are suspiciously regular (an implant checking in on a timer)
+    — the pcap twin of event_interarrival_regularity, same all-BIGINT
+    CV < 0.3 algebra (100*(n*Q - S^2) < 9*S^2) over integer
+    MILLISECOND gaps (packet timing needs sub-second resolution;
+    magnitudes stay < 1e15 for hour-scale timers over 1e6 packets).
+
+    Scale: LAG and the aggregate share one udp.stream partitioning —
+    a single keyed shuffle over the capture, constant state per flow.
+    """
+    from pyspark.sql.window import Window
+
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import beacon_capture
+
+    cap = beacon_capture(os.path.join(cache_dir(), "synth", "beacon.pcap"))
+    t = read_pcap(spark, cap, protocols=["udp"], engine="native")
+    w = Window.partitionBy("`udp.stream`").orderBy(
+        "`frame.time_epoch`", "`frame.number`"
+    )
+    us = F.unix_micros(F.col("`frame.time_epoch`"))
+    gap_ms = F.floor((us - F.unix_micros(
+        F.lag("`frame.time_epoch`").over(w)
+    )) / F.lit(1000)).cast("bigint")
+    stats = (
+        t.filter(F.col("`udp.stream`").isNotNull())
+        .select(F.col("`udp.stream`").alias("stream"),
+                gap_ms.alias("gap_ms"))
+        .groupBy("stream")
+        .agg(
+            F.count("gap_ms").alias("n_gaps"),
+            F.sum("gap_ms").alias("sum_gap_ms"),
+            F.sum(F.col("gap_ms") * F.col("gap_ms")).alias("sum_gap2"),
+        )
+        .filter(F.col("n_gaps") >= 3)
+    )
+    var_num = (F.col("n_gaps") * F.col("sum_gap2")
+               - F.col("sum_gap_ms") * F.col("sum_gap_ms"))
+    return stats.select(
+        "stream",
+        F.col("n_gaps").cast("bigint").alias("n_gaps"),
+        F.col("sum_gap_ms").cast("bigint").alias("sum_gap_ms"),
+        var_num.cast("bigint").alias("var_num"),
+        (F.lit(100) * var_num
+         < F.lit(9) * F.col("sum_gap_ms") * F.col("sum_gap_ms"))
+        .alias("is_beacon"),
+    )
+
+
+@query("pcap_port_scan_detect", oracle=None, tags=("pcap", "analysis"))
+def pcap_port_scan_detect(spark: SparkSession, sf: str) -> DataFrame:
+    """SYN-scan detection: per (src, dst) host pair inside a 10 s
+    tumbling window, count bare SYNs (syn & !ack) and the DISTINCT
+    destination ports they probe; >= 10 distinct probed ports in one
+    window flags a scanner. The reference can express this over
+    tshark columns too (README.md:15 delegation) — here it runs on
+    the native dissector with no subprocess.
+
+    Scale: one keyed aggregate on (src, dst, window) — partial
+    count-distinct via the Expand path is avoided by pre-projecting
+    the SYN rows first (scans are a tiny filtered slice of traffic,
+    so the distinct agg runs on the reduced stream).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import portscan_capture
+
+    cap = portscan_capture(
+        os.path.join(cache_dir(), "synth", "portscan.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
+    syns = t.filter(
+        F.col("`tcp.flags.syn`") & ~F.col("`tcp.flags.ack`")
+    ).select(
+        F.col("`ip.src`").alias("src"),
+        F.col("`ip.dst`").alias("dst"),
+        F.window("`frame.time_epoch`", "10 seconds").alias("w"),
+        F.col("`tcp.dstport`").alias("dport"),
+    )
+    return (
+        syns.groupBy("src", "dst", "w")
+        .agg(
+            F.count("*").cast("bigint").alias("n_syns"),
+            F.count_distinct("dport").cast("bigint")
+            .alias("n_ports_probed"),
+        )
+        .select(
+            "src", "dst",
+            ts_str(F.col("w.start")).alias("window_start"),
+            "n_syns", "n_ports_probed",
+            (F.col("n_ports_probed") >= 10).alias("is_scanner"),
+        )
+    )
+
+
+@query("pcap_ja3_fingerprint", oracle=None, tags=("pcap", "analysis"))
+def pcap_ja3_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
+    """JA3 TLS-client fingerprinting (Salesforce's md5 over
+    `version,ciphers,extensions,curves,formats`, GREASE-stripped —
+    the standard threat-intel join key): fingerprints are computed
+    packet-side in the native dissector, so this query is a plain
+    keyed aggregate — which hosts does each TLS stack talk to, and
+    how many distinct client IPs share one fingerprint.
+
+    Scale: fingerprinting is per-packet narrow work inside the scan;
+    the aggregate shuffles one short row per ClientHello (TLS data
+    records never leave the executor).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import ja3_capture
+
+    cap = ja3_capture(os.path.join(cache_dir(), "synth", "ja3.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tls"], engine="native")
+    hellos = t.filter(F.col("`tls.handshake.ja3`").isNotNull())
+    return (
+        hellos.groupBy(F.col("`tls.handshake.ja3`").alias("ja3"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_hellos"),
+            F.count_distinct("`ip.src`").cast("bigint")
+            .alias("n_clients"),
+            # Comma-joined sorted set, NOT an array: registry rule 8 —
+            # the driver canonicalizes EVERY gate row (rows-only
+            # included) and list cells are unhashable (r9 gate crash).
+            F.array_join(
+                F.array_sort(F.collect_set(
+                    F.col("`tls.handshake.extensions_server_name`"))),
+                ",",
+            ).alias("sni_hosts"),
+            F.min("`tls.handshake.ja3_string`").alias("ja3_string"),
+        )
+    )
+
+
+@query("pcap_arp_spoof_detect", oracle=None, tags=("pcap", "analysis"))
+def pcap_arp_spoof_detect(spark: SparkSession, sf: str) -> DataFrame:
+    """ARP-spoofing detection: an IP address claimed by more than one
+    MAC in ARP replies is the classic man-in-the-middle signal
+    (arpwatch / Wireshark's duplicate-address-detected expert info,
+    computed here over the native dissector's arp.* columns).
+
+    Scale: replies are a tiny filtered slice of traffic; one keyed
+    aggregate on the claimed IP with a bounded collect_set of MACs
+    (real networks have single-digit MACs per IP even under attack).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import arp_spoof_capture
+
+    cap = arp_spoof_capture(
+        os.path.join(cache_dir(), "synth", "arpspoof.pcap"))
+    t = read_pcap(spark, cap, protocols=["arp"], engine="native")
+    replies = t.filter(F.col("`arp.opcode`") == 2)
+    return (
+        replies.groupBy(
+            F.col("`arp.src.proto_ipv4`").alias("claimed_ip"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_replies"),
+            F.count_distinct("`arp.src.hw_mac`").cast("bigint")
+            .alias("n_macs"),
+            # Joined string per registry rule 8 (driver canonicalizer
+            # cannot hash list cells — r9 gate crash).
+            F.array_join(
+                F.array_sort(F.collect_set(F.col("`arp.src.hw_mac`"))),
+                ",",
+            ).alias("macs"),
+        )
+        .select(
+            "claimed_ip", "n_replies", "n_macs", "macs",
+            (F.col("n_macs") > 1).alias("is_spoofed"),
+        )
+    )
+
+
+@query("pcap_payload_entropy", oracle=None, tags=("pcap", "analysis"))
+def pcap_payload_entropy(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-stream Shannon entropy of TCP payload bytes — the standard
+    encrypted/compressed-traffic detector (entropy >= 7 bits/byte ~
+    TLS/zip; plaintext protocols sit around 4-5).
+
+    Scale: the byte explode is NARROW (no shuffle); the per-(stream,
+    byte) count has map-side partial aggregation, so at most 256
+    short rows per stream per partition reach the exchange — payload
+    bytes themselves never shuffle. The entropy folds into one more
+    keyed aggregate via H = log2(T) - sum(c*log2(c))/T, which needs
+    no per-bin probability join.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import entropy_capture
+
+    cap = entropy_capture(
+        os.path.join(cache_dir(), "synth", "entropy.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
+    pay = t.filter(
+        F.col("`tcp.payload`").isNotNull()
+        & (F.length("`tcp.payload`") > 0)
+    ).select(
+        F.col("`tcp.stream`").alias("stream"),
+        F.explode(
+            F.regexp_extract_all(
+                F.col("`tcp.payload`"), F.lit("[0-9a-f]{2}"), 0)
+        ).alias("b"),
+    )
+    hist = pay.groupBy("stream", "b").agg(F.count("*").alias("c"))
+    return (
+        hist.groupBy("stream")
+        .agg(
+            F.sum("c").cast("bigint").alias("n_bytes"),
+            F.count("*").cast("bigint").alias("n_distinct_bytes"),
+            F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clc"),
+        )
+        .select(
+            "stream", "n_bytes", "n_distinct_bytes",
+            F.round(
+                F.log2("n_bytes")
+                - F.col("_clc") / F.col("n_bytes").cast("double"),
+                4,
+            ).alias("entropy_bits"),
+        )
+        .select(
+            "stream", "n_bytes", "n_distinct_bytes", "entropy_bits",
+            (F.col("entropy_bits") >= 7.0).alias("is_high_entropy"),
+        )
+    )
+
+
+@query("pcap_follow_tcp_stream", oracle=None, tags=("pcap", "analysis"))
+def pcap_follow_tcp_stream(spark: SparkSession, sf: str) -> DataFrame:
+    """Wireshark's "Follow TCP Stream" as a query: reassemble each
+    direction's payload bytes in sequence order, retransmissions
+    deduplicated, and emit length + md5 of the reconstructed byte
+    stream (the md5 is the joinable content identity — IDS rules,
+    malware hashes, transcript dedup all key on it).
+
+    Scale: retransmission dedup and reassembly both key on (stream,
+    direction) — ONE keyed shuffle; ordering happens inside each
+    group via array_sort of (seq, payload) structs, never a global
+    sort. Holes (lost captures) surface as n_bytes < expected rather
+    than silently concatenating across gaps: contiguity is reported
+    via the contiguous flag comparing span to byte count.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import session_capture
+
+    cap = session_capture(
+        os.path.join(cache_dir(), "synth", "session.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
+    segs = (
+        t.filter(F.col("`tcp.len`") > 0)
+        .select(
+            F.col("`tcp.stream`").alias("stream"),
+            F.col("`ip.src`").alias("src"),
+            F.col("`tcp.srcport`").alias("sport"),
+            F.col("`tcp.seq`").alias("seq"),
+            F.col("`tcp.len`").alias("seg_len"),
+            F.col("`tcp.payload`").alias("payload"),
+        )
+        .dropDuplicates(["stream", "src", "sport", "seq", "payload"])
+    )
+    return (
+        segs.groupBy("stream", "src", "sport")
+        .agg(
+            F.count("*").cast("bigint").alias("n_segments"),
+            F.sum("seg_len").cast("bigint").alias("n_bytes"),
+            F.min("seq").alias("_seq_lo"),
+            F.max(F.col("seq") + F.col("seg_len")).alias("_seq_hi"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("seq", "payload"))),
+                    lambda s: s.getField("payload"),
+                ),
+                "",
+            ).alias("_hex"),
+        )
+        .select(
+            "stream", "src", "sport", "n_segments", "n_bytes",
+            (F.col("_seq_hi") - F.col("_seq_lo") == F.col("n_bytes"))
+            .alias("contiguous"),
+            F.md5(F.to_binary(F.col("_hex"), F.lit("hex")))
+            .alias("content_md5"),
+        )
+    )
+
+
+@query("pcap_dns_tunneling_detect", oracle=None,
+       tags=("pcap", "analysis"))
+def pcap_dns_tunneling_detect(spark: SparkSession, sf: str) -> DataFrame:
+    """DNS-tunneling detection per registered domain (last two
+    labels): exfil tunnels show many DISTINCT long subdomains under
+    one zone at sustained rate, where benign traffic re-asks a few
+    short names. Flags zones with >= 20 distinct subdomains AND
+    average qname length >= 40 — the iodine/dnscat2 signature.
+
+    Scale: one keyed aggregate on the registered domain (zone count
+    is tiny); qname parsing is a narrow regexp on the already-
+    dissected dns.qry.name column, no packet payload moves.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import dns_tunnel_capture
+
+    cap = dns_tunnel_capture(
+        os.path.join(cache_dir(), "synth", "dnstunnel.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "dns"],
+                  engine="native")
+    q = t.filter(
+        F.col("`dns.qry.name`").isNotNull()
+        & ~F.col("`dns.flags.response`")
+    ).select(
+        F.col("`dns.qry.name`").alias("qname"),
+        F.regexp_extract(
+            F.col("`dns.qry.name`"),
+            r"([A-Za-z0-9-]+\.[A-Za-z0-9-]+)$", 1,
+        ).alias("zone"),
+        F.col("`frame.time_epoch`").alias("ts"),
+    )
+    return (
+        q.groupBy("zone")
+        .agg(
+            F.count("*").cast("bigint").alias("n_queries"),
+            F.count_distinct("qname").cast("bigint")
+            .alias("n_distinct_subdomains"),
+            F.expr("sum(length(qname)) div count(*)").cast("bigint")
+            .alias("avg_qname_len"),
+            F.max(F.length("qname")).cast("bigint")
+            .alias("max_qname_len"),
+        )
+        .select(
+            "*",
+            ((F.col("n_distinct_subdomains") >= 20)
+             & (F.col("avg_qname_len") >= 40)).alias("is_suspected"),
+        )
+    )
+
+
+@query("pcap_vxlan_decap", oracle=None, tags=("pcap", "dissect"))
+def pcap_vxlan_decap(spark: SparkSession, sf: str) -> DataFrame:
+    """Overlay-network traffic accounting AFTER VXLAN decapsulation:
+    per (VNI, inner 5-tuple) packet/byte rollup. The decap walk in
+    the native dissector makes the inner flow the analytic identity
+    (tenants reuse RFC1918 space, so outer headers alone cannot
+    attribute traffic); un-tunneled underlay rows keep a NULL VNI.
+
+    Scale: decapsulation is per-packet narrow work inside the scan;
+    this rollup is one keyed aggregate on (vni, stream).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import vxlan_capture
+
+    cap = vxlan_capture(
+        os.path.join(cache_dir(), "synth", "vxlan.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tcp", "vxlan"],
+                  engine="native")
+    return (
+        t.filter(F.col("`tcp.srcport`").isNotNull())
+        .groupBy(
+            F.col("`vxlan.vni`").alias("vni"),
+            F.col("`ip.src`").alias("src"),
+            F.col("`ip.dst`").alias("dst"),
+            F.col("`tcp.srcport`").alias("sport"),
+            F.col("`tcp.dstport`").alias("dport"),
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
+            F.min("`vxlan.outer_ip_src`").alias("outer_src"),
+        )
+    )
+
+
+@query("pcap_quic_handshakes", oracle=None, tags=("pcap", "dissect"))
+def pcap_quic_handshakes(spark: SparkSession, sf: str) -> DataFrame:
+    """QUIC connection inventory from long-header packets: per
+    (version, client DCID) the packet-type mix (Initial/Handshake)
+    and whether the server answered with Version Negotiation — the
+    modern-web visibility check a TLS/SNI-only dissector misses
+    entirely once traffic moves to HTTP/3.
+
+    Long headers are parsed natively (quic.version/dcid/scid/
+    long.packet_type, tshark field names); short-header 1-RTT
+    packets are deliberately unclaimed (no wire-visible DCID
+    length — sources/native.py deviation note). Scale: header
+    parse is narrow per-packet work in the scan; this rollup is
+    one keyed aggregate on (version, dcid).
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import quic_capture
+
+    cap = quic_capture(
+        os.path.join(cache_dir(), "synth", "quic.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
+                  engine="native")
+    return (
+        t.filter(F.col("`quic.version`").isNotNull())
+        .groupBy(
+            F.col("`quic.version`").alias("version"),
+            F.col("`quic.dcid`").alias("dcid"),
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.sum(
+                F.when(F.col("`quic.long.packet_type`") == 0, 1)
+                .otherwise(0)
+            ).cast("bigint").alias("n_initial"),
+            F.sum(
+                F.when(F.col("`quic.long.packet_type`") == 2, 1)
+                .otherwise(0)
+            ).cast("bigint").alias("n_handshake"),
+            F.max(
+                (F.col("`quic.version`") == 0).cast("int")
+            ).cast("bigint").alias("version_negotiation"),
+        )
+        .orderBy("version", "dcid")
+    )
+
+
+@query("pcap_quic_vn_downgrade", oracle=None,
+       tags=("pcap", "dissect", "security"))
+def pcap_quic_vn_downgrade(spark: SparkSession, sf: str) -> DataFrame:
+    """QUIC Version-Negotiation downgrade detection: per client,
+    the version first offered, whether a VN packet came back, the
+    version of the first post-VN retry Initial, and a downgrade
+    flag — set when a client that offered a KNOWN version was
+    moved to a LOWER one by VN (RFC 9000 §6.3 forbids exactly
+    this: VN exists for unknown versions, so v2->VN->v1 is the
+    on-path downgrade-attack signature, while unknown->VN->v1 is
+    the legitimate negotiation).
+
+    Scale: Initials and VN packets reduce to two client-keyed
+    aggregates plus one client-keyed join — no windows over the
+    packet stream, no driver logic; at capture scale the heavy
+    lifting stays in the per-packet header parse inside the scan.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import quic_vn_capture
+
+    cap = quic_vn_capture(
+        os.path.join(cache_dir(), "synth", "quic_vn.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
+                  engine="native")
+    q = t.filter(F.col("`quic.version`").isNotNull()).select(
+        F.col("`frame.time_epoch`").alias("ft"),
+        F.col("`ip.src`").alias("src"),
+        F.col("`ip.dst`").alias("dst"),
+        F.col("`udp.dstport`").alias("dport"),
+        F.col("`quic.version`").cast("bigint").alias("version"),
+        F.col("`quic.long.packet_type`").alias("ptype"),
+    )
+    # client-sent Initials carry the offered version; VN packets
+    # (version 0) travel server->client, so the client is ip.dst.
+    # Real QUIC servers ALSO send Initial packets (server->client in
+    # the handshake), so Initials are restricted to the client
+    # direction (udp.dstport == 443) — otherwise the server IP would
+    # surface as a bogus client whose "first_version" is meaningless.
+    # The streaming twin (streaming/pcap_stream.py) applies the same
+    # direction gate.
+    initials = q.filter(
+        (F.col("version") != 0) & (F.col("ptype") == 0)
+        & (F.col("dport") == 443)
+    ).select(F.col("src").alias("client"), "version", "ft")
+    vn = (
+        q.filter(F.col("version") == 0)
+        .groupBy(F.col("dst").alias("client"))
+        .agg(F.min("ft").alias("vn_ft"))
+    )
+
+    def vrank(col):
+        # semantic version order (numeric compare is meaningless:
+        # v2's wire value 0x6b3343cf dwarfs v1's 1); unknown -> 0
+        return (
+            F.when(col == 1, 1)
+            .when(col == 0x6B3343CF, 2)
+            .otherwise(0)
+        )
+
+    # ONE left join (vn consumed exactly once — reusing the same
+    # aggregate on two join branches shares attribute ids across the
+    # tree and Spark's dedup then mis-resolves later column refs) and
+    # ONE aggregate: first/retry versions come from min(struct(ft,
+    # version)) with retry gated on post-VN arrival; min ignores the
+    # NULLed-out rows, so no-VN clients keep a NULL retry.
+    agg = (
+        initials.join(vn, "client", "left")
+        .groupBy("client")
+        .agg(
+            F.min(F.struct("ft", "version")).alias("first_pkt"),
+            F.min("vn_ft").alias("vn_ft"),
+            F.min(
+                F.when(F.col("ft") > F.col("vn_ft"),
+                       F.struct("ft", "version"))
+            ).alias("retry_pkt"),
+        )
+    )
+    first_v = F.col("first_pkt").getField("version")
+    retry_v = F.col("retry_pkt").getField("version")
+    return agg.select(
+        "client",
+        first_v.alias("first_version"),
+        F.col("vn_ft").isNotNull().cast("int").cast("bigint")
+        .alias("vn_received"),
+        retry_v.alias("retry_version"),
+        (
+            F.col("vn_ft").isNotNull()
+            & retry_v.isNotNull()
+            & (vrank(first_v) > 0)
+            & (vrank(retry_v) < vrank(first_v))
+        ).cast("int").cast("bigint").alias("downgrade"),
+    ).orderBy("client")
+
+
+@query("pcap_traceroute_path", oracle=None, tags=("pcap", "analysis"))
+def pcap_traceroute_path(spark: SparkSession, sf: str) -> DataFrame:
+    """Traceroute path reconstruction from a passive capture: UDP
+    probes (classic 33434+ destination ports) carry increasing TTLs;
+    each ICMP time-exceeded / port-unreachable is attributed to the
+    most recent preceding probe from the same client — yielding
+    (hop number, router, RTT) without running traceroute again.
+
+    Scale: probes and ICMP replies key on the CLIENT address (probe
+    ip.src == reply ip.dst), so the as-of matching is last_value
+    windows over one client-keyed union — the join_asof rewrite, one
+    shuffle, no time-range cross product.
+    """
+    from pyspark.sql.window import Window
+
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import traceroute_capture
+
+    cap = traceroute_capture(
+        os.path.join(cache_dir(), "synth", "traceroute.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "icmp"],
+                  engine="native")
+    probes = t.filter(
+        (F.col("`udp.dstport`") >= 33434)
+        & (F.col("`udp.dstport`") <= 33600)
+    ).select(
+        F.col("`ip.src`").alias("client"),
+        F.col("`frame.time_epoch`").alias("ts"),
+        F.lit("probe").alias("kind"),
+        F.col("`ip.ttl`").alias("probe_ttl"),
+        F.lit(None).cast("string").alias("router"),
+        F.lit(None).cast("bigint").alias("icmp_type"),
+    )
+    resps = t.filter(F.col("`icmp.type`").isin(11, 3)).select(
+        F.col("`ip.dst`").alias("client"),
+        F.col("`frame.time_epoch`").alias("ts"),
+        F.lit("resp").alias("kind"),
+        F.lit(None).cast("bigint").alias("probe_ttl"),
+        F.col("`ip.src`").alias("router"),
+        F.col("`icmp.type`").cast("bigint").alias("icmp_type"),
+    )
+    merged = probes.unionByName(resps)
+    w = (
+        Window.partitionBy("client")
+        .orderBy("ts", "kind")  # 'probe' < 'resp' breaks ts ties
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    attributed = merged.select(
+        "*",
+        F.last("probe_ttl", ignorenulls=True).over(w).alias("hop"),
+        F.last(
+            F.when(F.col("kind") == "probe", F.col("ts")),
+            ignorenulls=True,
+        ).over(w).alias("probe_ts"),
+    ).filter(F.col("kind") == "resp")
+    return attributed.select(
+        "client",
+        F.col("hop").cast("bigint"),
+        "router",
+        (
+            (F.unix_micros("ts") - F.unix_micros("probe_ts"))
+        ).cast("bigint").alias("rtt_us"),
+        (F.col("icmp_type") == 3).alias("is_destination"),
+    )
+
+
+@query("pcap_filter_and_save", oracle=None, tags=("pcap", "sink"))
+def pcap_filter_and_save(spark: SparkSession, sf: str) -> DataFrame:
+    """Filter-and-save: keep one flow of a capture with a DataFrame
+    filter, WRITE it back as a valid pcap via the pcap sink
+    (df.write.format('pcap')), then re-read the written capture and
+    roll it up — the replay/evidence-extraction workflow the
+    reference cannot express (it has no writer at all).
+
+    Scale: the write is embarrassingly parallel (one part-file per
+    task, atomic rename publish); the re-read is the ordinary
+    multi-file scan, one partition per part.
+    """
+    import tempfile
+
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.native import stream_id
+    from wireduck_spark.sources.synth import session_capture
+
+    cap = session_capture(
+        os.path.join(cache_dir(), "synth", "session.pcap"))
+    full = read_pcap(spark, cap, protocols=["frame", "ip", "tcp"],
+                     engine="native")
+    target = stream_id("10.0.1.1", 40001, "10.0.2.1", 80)
+    out_dir = os.path.join(tempfile.gettempdir(),
+                           "wireduck_filter_save_q")
+    (
+        full.filter(F.col("`tcp.stream`") == target)
+        .select("`frame.time_epoch`", "`frame.raw`")
+        .write.format("pcap").mode("overwrite").save(out_dir)
+    )
+    reread = read_pcap(spark, f"{out_dir}/*.pcap",
+                       protocols=["ip", "tcp"], engine="native")
+    return reread.groupBy(
+        F.col("`ip.src`").alias("src"),
+        F.col("`tcp.srcport`").alias("sport"),
+    ).agg(
+        F.count("*").cast("bigint").alias("n_packets"),
+        F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
+    )
+
+
+@query("pcap_http_transactions", oracle=None, tags=("pcap", "analysis"))
+def pcap_http_transactions(spark: SparkSession, sf: str) -> DataFrame:
+    """HTTP request/response pairing with latency: the k-th request
+    on a stream matches the k-th response (HTTP/1.1 pipelining
+    ordering guarantee) — per-transaction method, URI, status, and
+    time-to-first-byte, the per-hit web log reconstructed from
+    packets.
+
+    Scale: both sides get their per-stream ordinal from ONE
+    stream-keyed window exchange; the pairing is a (stream, ordinal)
+    equi-join of two small projected slices, never a self-join of
+    the capture.
+    """
+    from pyspark.sql.window import Window
+
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import multiproto_capture
+
+    cap = multiproto_capture(
+        os.path.join(cache_dir(), "synth", "multiproto.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "tcp", "http"],
+                  engine="native")
+    w_req = Window.partitionBy(F.col("`tcp.stream`")).orderBy(
+        "`frame.time_epoch`", "`frame.number`")
+    reqs = (
+        t.filter(F.col("`http.request.method`").isNotNull())
+        .select(
+            F.col("`tcp.stream`").alias("stream"),
+            F.col("`http.request.method`").alias("method"),
+            F.col("`http.request.uri`").alias("uri"),
+            F.col("`frame.time_epoch`").alias("req_ts"),
+        )
+        .withColumn("ordinal", F.row_number().over(
+            Window.partitionBy("stream").orderBy("req_ts")))
+    )
+    resps = (
+        t.filter(F.col("`http.response.code`").isNotNull())
+        .select(
+            F.col("`tcp.stream`").alias("r_stream"),
+            F.col("`http.response.code`").alias("status"),
+            F.col("`frame.time_epoch`").alias("resp_ts"),
+        )
+        .withColumn("r_ordinal", F.row_number().over(
+            Window.partitionBy("r_stream").orderBy("resp_ts")))
+    )
+    _ = w_req  # alias kept for readability of the window contract
+    return (
+        reqs.join(
+            resps,
+            (reqs.stream == resps.r_stream)
+            & (reqs.ordinal == resps.r_ordinal),
+            "left",
+        )
+        .select(
+            "stream", "ordinal", "method", "uri", "status",
+            (F.unix_micros("resp_ts") - F.unix_micros("req_ts"))
+            .cast("bigint").alias("latency_us"),
+        )
+    )
+
+
+@query("pcap_ipv6_traffic", oracle=None, tags=("pcap", "dissect"))
+def pcap_ipv6_traffic(spark: SparkSession, sf: str) -> DataFrame:
+    """Dual-stack traffic rollup: per address-family packet/byte
+    counts plus per-IPv6-endpoint-pair totals — exercises the v6
+    dissection path (40-byte fixed header, ext-header walk) through
+    a registered gate query rather than unit tests alone.
+
+    Scale: one keyed aggregate; family derives narrowly from which
+    address column is non-null.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import ipv6_capture
+
+    cap = ipv6_capture(
+        os.path.join(cache_dir(), "synth", "ipv6.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "ipv6", "udp", "tcp"],
+                  engine="native")
+    fam = F.when(F.col("`ipv6.src`").isNotNull(), "ipv6").otherwise(
+        F.when(F.col("`ip.src`").isNotNull(), "ipv4").otherwise("other"))
+    return (
+        t.groupBy(
+            fam.alias("family"),
+            F.coalesce(F.col("`ipv6.src`"), F.col("`ip.src`"))
+            .alias("src"),
+            F.coalesce(F.col("`ipv6.dst`"), F.col("`ip.dst`"))
+            .alias("dst"),
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.sum("`frame.len`").cast("bigint").alias("total_bytes"),
+        )
+    )
+
+
+@query("pcap_quic_federation", oracle=None,
+       tags=("pcap", "join", "federation", "dissect"))
+def pcap_quic_federation(spark: SparkSession, sf: str) -> DataFrame:
+    """HTTP/3 federation: QUIC long-header traffic joined to a
+    parquet edge-catalog dimension (server IP -> tenant) — the
+    pcap_lake_federation pitch extended to the protocol where
+    TLS/SNI dissection goes dark (QUIC encrypts the ClientHello
+    into the Initial packet). Per (tenant, version): packets and
+    DISTINCT connection attempts (DCIDs), the rollup an edge
+    operator reads during a version rollout.
+
+    Scale: same shape as the TCP federation — broadcast dim onto
+    the split-parallel capture scan, one keyed aggregate; the
+    distinct-DCID count rides the same shuffle.
+    """
+    from wireduck_spark.sources.glossary import (cache_dir,
+                                                 spark_scratch_dir)
+    from wireduck_spark.sources.synth import quic_capture
+
+    catalog_path = os.path.join(spark_scratch_dir(),
+                                "edge_catalog.parquet")
+    spark.createDataFrame(
+        [("203.0.113.80", "cloud-edge-1")],
+        "server_ip STRING, tenant STRING",
+    ).coalesce(1).write.mode("overwrite").parquet(catalog_path)
+    dim = spark.read.parquet(catalog_path)
+    cap = quic_capture(
+        os.path.join(cache_dir(), "synth", "quic.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
+                  engine="native").filter(
+        F.col("`quic.version`").isNotNull())
+    server_ip = F.when(
+        F.col("`udp.dstport`") == 443, F.col("`ip.dst`")
+    ).otherwise(F.col("`ip.src`"))
+    return (
+        t.withColumn("server_ip", server_ip)
+        .join(F.broadcast(dim), "server_ip", "left")
+        .groupBy(
+            F.coalesce(F.col("tenant"), F.lit("unknown"))
+            .alias("tenant"),
+            F.col("`quic.version`").alias("version"),
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.countDistinct("`quic.dcid`").cast("bigint")
+            .alias("n_dcids"),
+        )
+        .orderBy("tenant", "version")
+    )
+
+
+@query("pcap_service_inventory", oracle=None,
+       tags=("pcap", "dissect", "security"))
+def pcap_service_inventory(spark: SparkSession, sf: str) -> DataFrame:
+    """Cleartext-service inventory: SSH software banners, SMTP and
+    FTP command/response traffic rolled up per (server, service) —
+    the audit that finds the dropbear box and the anonymous-FTP
+    login nobody remembers deploying. Banner protocols are the
+    long tail TLS never hides; one narrow dissection pass feeds one
+    keyed aggregate.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import services_capture
+
+    cap = services_capture(
+        os.path.join(cache_dir(), "synth", "services.pcap"))
+    t = read_pcap(spark, cap,
+                  protocols=["ip", "tcp", "ssh", "smtp", "ftp"],
+                  engine="native")
+    service = (
+        F.when(F.col("`ssh.protocol`").isNotNull(), "ssh")
+        .when(F.col("`smtp.response.code`").isNotNull()
+              | F.col("`smtp.req.command`").isNotNull(), "smtp")
+        .when(F.col("`ftp.response.code`").isNotNull()
+              | F.col("`ftp.request.command`").isNotNull(), "ftp")
+    )
+    server = F.when(
+        F.col("`tcp.srcport`").isin(21, 22, 25), F.col("`ip.src`")
+    ).otherwise(F.col("`ip.dst`"))
+    return (
+        t.withColumn("service", service)
+        .filter(F.col("service").isNotNull())
+        .groupBy(server.alias("server"), "service")
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.min("`ssh.protocol`").alias("ssh_banner"),
+            F.countDistinct(
+                F.coalesce(
+                    F.col("`smtp.req.command`"),
+                    F.col("`ftp.request.command`"),
+                )
+            ).cast("bigint").alias("n_distinct_commands"),
+        )
+        .orderBy("server", "service")
+    )
+
+
+@query("pcap_ntp_clock_skew", oracle=None,
+       tags=("pcap", "analysis", "dissect"))
+def pcap_ntp_clock_skew(spark: SparkSession, sf: str) -> DataFrame:
+    """Passive NTP clock-skew audit: every NTP packet carries the
+    sender's transmit timestamp (ntp.xmt), so xmt minus the capture
+    timestamp IS the sender's clock offset from the capture box —
+    per host the fleet's time hygiene falls out of traffic you were
+    already capturing (clients in mode 3, servers in mode 4, plus
+    the advertised stratum). The classic use: find the machine
+    whose TLS tickets keep expiring because its clock runs fast.
+
+    Skews are exact integer microseconds (both timestamps are
+    integer-microsecond fields); the mean is a truncating integer
+    div. Scale: narrow per-packet header parse in the scan, one
+    (host, role)-keyed aggregate.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import ntp_capture
+
+    cap = ntp_capture(os.path.join(cache_dir(), "synth", "ntp.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "ntp"],
+                  engine="native")
+    n = t.filter(F.col("`ntp.flags.mode`").isNotNull()).select(
+        F.col("`ip.src`").alias("host"),
+        F.when(F.col("`ntp.flags.mode`") == 3, F.lit("client"))
+        .otherwise(F.lit("server")).alias("role"),
+        F.col("`ntp.stratum`").alias("stratum"),
+        (
+            F.unix_micros(F.col("`ntp.xmt`"))
+            - F.unix_micros(F.col("`frame.time_epoch`"))
+        ).alias("skew_us"),
+    )
+    return (
+        n.groupBy("host", "role")
+        .agg(
+            F.count("*").cast("bigint").alias("n_packets"),
+            F.min("stratum").cast("bigint").alias("stratum"),
+            F.expr("CAST(sum(skew_us) div count(*) AS BIGINT)")
+            .alias("mean_skew_us"),
+        )
+        .orderBy("host", "role")
+    )
+
+
+@query("pcap_dhcp_lease_inventory", oracle=None,
+       tags=("pcap", "analysis", "dissect"))
+def pcap_dhcp_lease_inventory(spark: SparkSession, sf: str) -> DataFrame:
+    """DHCP lease inventory from passive capture: per client MAC the
+    DORA message-type counts (discover/offer/request/ack/nak) and
+    the currently-leased address (yiaddr of the LAST ACK — the
+    max-by-time struct fold, no window) — who is on the network and
+    which requests the server refused, from broadcast traffic every
+    segment sees for free.
+
+    Scale: per-packet BOOTP/option-53 parse in the scan; one
+    MAC-keyed aggregate with conditional counts, all combinable.
+    """
+    from wireduck_spark.sources.glossary import cache_dir
+    from wireduck_spark.sources.synth import dhcp_capture
+
+    cap = dhcp_capture(os.path.join(cache_dir(), "synth", "dhcp.pcap"))
+    t = read_pcap(spark, cap, protocols=["ip", "udp", "dhcp"],
+                  engine="native")
+    d = t.filter(F.col("`dhcp.option.dhcp`").isNotNull()).select(
+        F.col("`dhcp.hw.mac_addr`").alias("mac"),
+        F.col("`dhcp.option.dhcp`").alias("msg"),
+        F.col("`frame.time_epoch`").alias("ft"),
+        F.col("`dhcp.ip.your`").alias("yiaddr"),
+    )
+
+    def n_of(code, name):
+        return F.sum(F.when(F.col("msg") == code, 1).otherwise(0)) \
+            .cast("bigint").alias(name)
+
+    lease = F.max(
+        F.when(F.col("msg") == 5, F.struct("ft", "yiaddr"))
+    ).getField("yiaddr")
+    return (
+        d.groupBy("mac")
+        .agg(
+            n_of(1, "n_discover"),
+            n_of(2, "n_offer"),
+            n_of(3, "n_request"),
+            n_of(5, "n_ack"),
+            n_of(6, "n_nak"),
+            F.coalesce(lease, F.lit("none")).alias("leased_ip"),
+        )
+        .orderBy("mac")
+    )
+
+
+if os.path.exists(FIXTURE):
 
     @query("pcap_scan_default", oracle=None, tags=("pcap", "scan"),
            bench=True)
@@ -117,85 +1252,6 @@ if _have_fixture():
             )
         )
 
-    @query("pcap_dns_http_dissect", oracle=None, tags=("pcap", "dissect"))
-    def pcap_dns_http_dissect(spark: SparkSession, sf: str) -> DataFrame:
-        """Deep-protocol dissection without tshark (round-1 VERDICT gap #1):
-        DNS query names + HTTP methods/codes from the native dissector over
-        a deterministic synthetic capture (sources/synth.py). The reference
-        needs tshark for any of these columns (wireduck_extension.cpp:109).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import multiproto_capture
-
-        cap = multiproto_capture(
-            os.path.join(cache_dir(), "synth", "multiproto.pcap")
-        )
-        df = read_pcap(spark, cap, protocols=["dns", "http", "icmp", "arp"],
-                       engine="native")
-        return (
-            df.groupBy(
-                F.col("`dns.qry.name`").alias("qry_name"),
-                F.col("`http.request.method`").alias("http_method"),
-                F.col("`http.response.code`").alias("http_code"),
-                F.col("`icmp.type`").alias("icmp_type"),
-                F.col("`arp.opcode`").alias("arp_op"),
-            )
-            .agg(F.count("*").alias("n"))
-        )
-
-    @query("pcap_throughput_split", oracle=None, tags=("pcap", "scan"),
-           bench=True)
-    def pcap_throughput_split(spark: SparkSession, sf: str) -> DataFrame:
-        """Scan throughput probe: a 200k-packet (~21 MB) capture read with
-        byte-range splitting forced (split_threshold=2 MB -> ceil(size /
-        2 MB) = 11 parallel slices), aggregated per port. This is the 100-TB plan shape — many
-        executors each dissecting a byte range of one large capture — and
-        the bench entry that tracks dissector + Arrow-emission speed
-        (round-1 VERDICT asked for exactly this datapoint)."""
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.pcap import register
-        from wireduck_spark.sources.synth import throughput_capture
-
-        register(spark)
-        cap = throughput_capture(
-            os.path.join(cache_dir(), "synth", "throughput.pcap")
-        )
-        df = (
-            spark.read.format("pcap")
-            .option("engine", "native")
-            .option("protocols", "tcp")
-            .option("split_threshold", str(2 * 1024 * 1024))
-            .load(cap)
-        )
-        return (
-            df.filter(F.col("`tcp.srcport`").isNotNull())
-            .groupBy(F.col("`tcp.srcport`").alias("srcport"))
-            .agg(
-                F.count("*").alias("n_packets"),
-                F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
-            )
-        )
-
-    @query("pcap_tls_sni", oracle=None, tags=("pcap", "dissect"))
-    def pcap_tls_sni(spark: SparkSession, sf: str) -> DataFrame:
-        """TLS visibility without tshark: SNI host names + handshake
-        types/versions from the record-layer dissector over a synthetic
-        handshake capture — the join key of flow-to-domain analytics."""
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import tls_capture
-
-        cap = tls_capture(os.path.join(cache_dir(), "synth", "tls.pcap"))
-        df = read_pcap(spark, cap, protocols=["tls"], engine="native")
-        return (
-            df.filter(F.col("`tls.record.content_type`").isNotNull())
-            .groupBy(
-                F.col("`tls.handshake.extensions_server_name`").alias("sni"),
-                F.col("`tls.handshake.type`").alias("hs_type"),
-                F.col("`tls.record.content_type`").alias("rec_type"),
-            )
-            .agg(F.count("*").alias("n"))
-        )
-
     @query("pcap_flow_stats", oracle=None, tags=("pcap", "window"))
     def pcap_flow_stats(spark: SparkSession, sf: str) -> DataFrame:
         """Per-TCP-stream flow statistics (packets, bytes, duration,
@@ -220,745 +1276,6 @@ if _have_fixture():
                 .cast("bigint")
                 .alias("syn_count"),
             )
-        )
-
-    def _session_cap() -> str:
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import session_capture
-
-        return session_capture(
-            os.path.join(cache_dir(), "synth", "session.pcap")
-        )
-
-    @query("pcap_tcp_handshake_rtt", oracle=None,
-           tags=("pcap", "analysis"))
-    def pcap_tcp_handshake_rtt(spark: SparkSession, sf: str) -> DataFrame:
-        """Per-connection SYN -> SYN-ACK round-trip time (Wireshark's
-        tcp.analysis.initial_rtt, reachable in the reference only through
-        tshark's analysis columns). The handshake filter (`tcp.flags.syn`)
-        runs BEFORE the per-stream shuffle, so only the two handshake
-        packets of each connection move — at 100 TB that is ~2 rows per
-        flow, not the flow's payload. RTT is exact integer microseconds
-        (unix_micros on both conditional mins); connections whose
-        handshake was not captured simply have no row.
-        """
-        t = read_pcap(spark, _session_cap(), protocols=["tcp"],
-                      engine="native")
-        syn_pkts = t.filter(F.col("`tcp.flags.syn`"))
-        us = F.unix_micros(F.col("`frame.time_epoch`"))
-        is_synack = F.col("`tcp.flags.ack`")
-        agg = syn_pkts.groupBy(F.col("`tcp.stream`").alias("stream")).agg(
-            F.min(F.when(~is_synack, us)).alias("syn_us"),
-            F.min(F.when(is_synack, us)).alias("synack_us"),
-        )
-        return agg.filter(
-            F.col("syn_us").isNotNull() & F.col("synack_us").isNotNull()
-        ).select(
-            "stream",
-            (F.col("synack_us") - F.col("syn_us")).cast("bigint")
-            .alias("rtt_us"),
-        )
-
-    @query("pcap_tcp_retransmissions", oracle=None,
-           tags=("pcap", "analysis"))
-    def pcap_tcp_retransmissions(spark: SparkSession, sf: str) -> DataFrame:
-        """Per-stream retransmission counts (tcp.analysis.retransmission):
-        a data-bearing segment whose (direction, sequence number, length)
-        was already seen is a retransmit. Two-level aggregate — the first
-        groupBy collapses duplicate segments map-side (partial agg), so
-        the second per-stream pass sees one row per distinct segment, not
-        per packet; both shuffles are keyed on the stream prefix.
-        """
-        t = read_pcap(spark, _session_cap(), protocols=["tcp"],
-                      engine="native")
-        segs = (
-            t.filter(F.col("`tcp.len`") > 0)
-            .groupBy(
-                F.col("`tcp.stream`").alias("stream"),
-                # direction within a stream == the (sport, dport)
-                # orientation of its canonical endpoint pair
-                F.col("`tcp.srcport`").alias("sport"),
-                F.col("`tcp.dstport`").alias("dport"),
-                F.col("`tcp.seq`").alias("seq"),
-                F.col("`tcp.len`").alias("seg_len"),
-            )
-            .agg(F.count("*").alias("n_seen"))
-        )
-        return segs.groupBy("stream").agg(
-            F.sum("n_seen").cast("bigint").alias("data_segments"),
-            F.sum(F.col("n_seen") - 1).cast("bigint")
-            .alias("retransmissions"),
-        )
-
-    @query("pcap_protocol_hierarchy", oracle=None,
-           tags=("pcap", "analysis"))
-    def pcap_protocol_hierarchy(spark: SparkSession, sf: str) -> DataFrame:
-        """Wireshark's 'Protocol Hierarchy Statistics': every frame counts
-        once at each level of its frame.protocols path (eth, eth:ip,
-        eth:ip:udp:dns, ...). The prefix expansion is a narrow
-        posexplode (path depth <= ~6, so fan-out is bounded), followed by
-        one keyed aggregate — no joins, no windows.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import multiproto_capture
-
-        cap = multiproto_capture(
-            os.path.join(cache_dir(), "synth", "multiproto.pcap")
-        )
-        df = read_pcap(spark, cap, engine="native")
-        parts = F.split(F.col("`frame.protocols`"), ":")
-        exploded = df.select(
-            F.col("`frame.len`").alias("frame_len"),
-            parts.alias("parts"),
-            F.posexplode(parts).alias("depth", "proto"),
-        )
-        prefix = F.array_join(
-            F.slice(F.col("parts"), 1, F.col("depth") + 1), ":"
-        )
-        return (
-            exploded.select(prefix.alias("proto_path"), "frame_len")
-            .groupBy("proto_path")
-            .agg(
-                F.count("*").alias("n_frames"),
-                F.sum("frame_len").cast("bigint").alias("total_bytes"),
-            )
-        )
-
-    @query("pcap_dns_latency", oracle=None, tags=("pcap", "analysis"))
-    def pcap_dns_latency(spark: SparkSession, sf: str) -> DataFrame:
-        """DNS transaction latency: match each query to its response on
-        (udp.stream, dns.id) — udp.stream is direction-agnostic by
-        construction (sorted endpoint pair, native.py stream_id), so both
-        halves of a transaction share the key and the match is a single
-        keyed aggregate, not a self-join. Unanswered queries surface with
-        NULL latency (the monitoring signal); latency is exact integer
-        microseconds.
-        """
-        t = read_pcap(spark, _session_cap(), protocols=["udp", "dns"],
-                      engine="native")
-        us = F.unix_micros(F.col("`frame.time_epoch`"))
-        is_resp = F.col("`dns.flags.response`")
-        return (
-            t.filter(F.col("`dns.id`").isNotNull())
-            .groupBy(
-                F.col("`udp.stream`").alias("stream"),
-                F.col("`dns.id`").alias("dns_id"),
-                F.col("`dns.qry.name`").alias("qry_name"),
-            )
-            .agg(
-                F.min(F.when(~is_resp, us)).alias("query_us"),
-                F.min(F.when(is_resp, us)).alias("resp_us"),
-                F.max(F.when(is_resp, F.col("`dns.count.answers`")))
-                .alias("n_answers"),
-            )
-            .select(
-                "stream", "dns_id", "qry_name", "n_answers",
-                (F.col("resp_us") - F.col("query_us")).cast("bigint")
-                .alias("latency_us"),
-            )
-        )
-
-    @query("pcap_beacon_detection", oracle=None, tags=("pcap", "analysis"))
-    def pcap_beacon_detection(spark: SparkSession, sf: str) -> DataFrame:
-        """Beacon hunting in the packet domain: flows whose inter-packet
-        gaps are suspiciously regular (an implant checking in on a timer)
-        — the pcap twin of event_interarrival_regularity, same all-BIGINT
-        CV < 0.3 algebra (100*(n*Q - S^2) < 9*S^2) over integer
-        MILLISECOND gaps (packet timing needs sub-second resolution;
-        magnitudes stay < 1e15 for hour-scale timers over 1e6 packets).
-
-        Scale: LAG and the aggregate share one udp.stream partitioning —
-        a single keyed shuffle over the capture, constant state per flow.
-        """
-        from pyspark.sql.window import Window
-
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import beacon_capture
-
-        cap = beacon_capture(os.path.join(cache_dir(), "synth", "beacon.pcap"))
-        t = read_pcap(spark, cap, protocols=["udp"], engine="native")
-        w = Window.partitionBy("`udp.stream`").orderBy(
-            "`frame.time_epoch`", "`frame.number`"
-        )
-        us = F.unix_micros(F.col("`frame.time_epoch`"))
-        gap_ms = F.floor((us - F.unix_micros(
-            F.lag("`frame.time_epoch`").over(w)
-        )) / F.lit(1000)).cast("bigint")
-        stats = (
-            t.filter(F.col("`udp.stream`").isNotNull())
-            .select(F.col("`udp.stream`").alias("stream"),
-                    gap_ms.alias("gap_ms"))
-            .groupBy("stream")
-            .agg(
-                F.count("gap_ms").alias("n_gaps"),
-                F.sum("gap_ms").alias("sum_gap_ms"),
-                F.sum(F.col("gap_ms") * F.col("gap_ms")).alias("sum_gap2"),
-            )
-            .filter(F.col("n_gaps") >= 3)
-        )
-        var_num = (F.col("n_gaps") * F.col("sum_gap2")
-                   - F.col("sum_gap_ms") * F.col("sum_gap_ms"))
-        return stats.select(
-            "stream",
-            F.col("n_gaps").cast("bigint").alias("n_gaps"),
-            F.col("sum_gap_ms").cast("bigint").alias("sum_gap_ms"),
-            var_num.cast("bigint").alias("var_num"),
-            (F.lit(100) * var_num
-             < F.lit(9) * F.col("sum_gap_ms") * F.col("sum_gap_ms"))
-            .alias("is_beacon"),
-        )
-
-    @query("pcap_port_scan_detect", oracle=None, tags=("pcap", "analysis"))
-    def pcap_port_scan_detect(spark: SparkSession, sf: str) -> DataFrame:
-        """SYN-scan detection: per (src, dst) host pair inside a 10 s
-        tumbling window, count bare SYNs (syn & !ack) and the DISTINCT
-        destination ports they probe; >= 10 distinct probed ports in one
-        window flags a scanner. The reference can express this over
-        tshark columns too (README.md:15 delegation) — here it runs on
-        the native dissector with no subprocess.
-
-        Scale: one keyed aggregate on (src, dst, window) — partial
-        count-distinct via the Expand path is avoided by pre-projecting
-        the SYN rows first (scans are a tiny filtered slice of traffic,
-        so the distinct agg runs on the reduced stream).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import portscan_capture
-
-        cap = portscan_capture(
-            os.path.join(cache_dir(), "synth", "portscan.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
-        syns = t.filter(
-            F.col("`tcp.flags.syn`") & ~F.col("`tcp.flags.ack`")
-        ).select(
-            F.col("`ip.src`").alias("src"),
-            F.col("`ip.dst`").alias("dst"),
-            F.window("`frame.time_epoch`", "10 seconds").alias("w"),
-            F.col("`tcp.dstport`").alias("dport"),
-        )
-        return (
-            syns.groupBy("src", "dst", "w")
-            .agg(
-                F.count("*").cast("bigint").alias("n_syns"),
-                F.count_distinct("dport").cast("bigint")
-                .alias("n_ports_probed"),
-            )
-            .select(
-                "src", "dst",
-                ts_str(F.col("w.start")).alias("window_start"),
-                "n_syns", "n_ports_probed",
-                (F.col("n_ports_probed") >= 10).alias("is_scanner"),
-            )
-        )
-
-    @query("pcap_ja3_fingerprint", oracle=None, tags=("pcap", "analysis"))
-    def pcap_ja3_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-        """JA3 TLS-client fingerprinting (Salesforce's md5 over
-        `version,ciphers,extensions,curves,formats`, GREASE-stripped —
-        the standard threat-intel join key): fingerprints are computed
-        packet-side in the native dissector, so this query is a plain
-        keyed aggregate — which hosts does each TLS stack talk to, and
-        how many distinct client IPs share one fingerprint.
-
-        Scale: fingerprinting is per-packet narrow work inside the scan;
-        the aggregate shuffles one short row per ClientHello (TLS data
-        records never leave the executor).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import ja3_capture
-
-        cap = ja3_capture(os.path.join(cache_dir(), "synth", "ja3.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tls"], engine="native")
-        hellos = t.filter(F.col("`tls.handshake.ja3`").isNotNull())
-        return (
-            hellos.groupBy(F.col("`tls.handshake.ja3`").alias("ja3"))
-            .agg(
-                F.count("*").cast("bigint").alias("n_hellos"),
-                F.count_distinct("`ip.src`").cast("bigint")
-                .alias("n_clients"),
-                # Comma-joined sorted set, NOT an array: registry rule 8 —
-                # the driver canonicalizes EVERY gate row (rows-only
-                # included) and list cells are unhashable (r9 gate crash).
-                F.array_join(
-                    F.array_sort(F.collect_set(
-                        F.col("`tls.handshake.extensions_server_name`"))),
-                    ",",
-                ).alias("sni_hosts"),
-                F.min("`tls.handshake.ja3_string`").alias("ja3_string"),
-            )
-        )
-
-    @query("pcap_arp_spoof_detect", oracle=None, tags=("pcap", "analysis"))
-    def pcap_arp_spoof_detect(spark: SparkSession, sf: str) -> DataFrame:
-        """ARP-spoofing detection: an IP address claimed by more than one
-        MAC in ARP replies is the classic man-in-the-middle signal
-        (arpwatch / Wireshark's duplicate-address-detected expert info,
-        computed here over the native dissector's arp.* columns).
-
-        Scale: replies are a tiny filtered slice of traffic; one keyed
-        aggregate on the claimed IP with a bounded collect_set of MACs
-        (real networks have single-digit MACs per IP even under attack).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import arp_spoof_capture
-
-        cap = arp_spoof_capture(
-            os.path.join(cache_dir(), "synth", "arpspoof.pcap"))
-        t = read_pcap(spark, cap, protocols=["arp"], engine="native")
-        replies = t.filter(F.col("`arp.opcode`") == 2)
-        return (
-            replies.groupBy(
-                F.col("`arp.src.proto_ipv4`").alias("claimed_ip"))
-            .agg(
-                F.count("*").cast("bigint").alias("n_replies"),
-                F.count_distinct("`arp.src.hw_mac`").cast("bigint")
-                .alias("n_macs"),
-                # Joined string per registry rule 8 (driver canonicalizer
-                # cannot hash list cells — r9 gate crash).
-                F.array_join(
-                    F.array_sort(F.collect_set(F.col("`arp.src.hw_mac`"))),
-                    ",",
-                ).alias("macs"),
-            )
-            .select(
-                "claimed_ip", "n_replies", "n_macs", "macs",
-                (F.col("n_macs") > 1).alias("is_spoofed"),
-            )
-        )
-
-    @query("pcap_payload_entropy", oracle=None, tags=("pcap", "analysis"))
-    def pcap_payload_entropy(spark: SparkSession, sf: str) -> DataFrame:
-        """Per-stream Shannon entropy of TCP payload bytes — the standard
-        encrypted/compressed-traffic detector (entropy >= 7 bits/byte ~
-        TLS/zip; plaintext protocols sit around 4-5).
-
-        Scale: the byte explode is NARROW (no shuffle); the per-(stream,
-        byte) count has map-side partial aggregation, so at most 256
-        short rows per stream per partition reach the exchange — payload
-        bytes themselves never shuffle. The entropy folds into one more
-        keyed aggregate via H = log2(T) - sum(c*log2(c))/T, which needs
-        no per-bin probability join.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import entropy_capture
-
-        cap = entropy_capture(
-            os.path.join(cache_dir(), "synth", "entropy.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
-        pay = t.filter(
-            F.col("`tcp.payload`").isNotNull()
-            & (F.length("`tcp.payload`") > 0)
-        ).select(
-            F.col("`tcp.stream`").alias("stream"),
-            F.explode(
-                F.regexp_extract_all(
-                    F.col("`tcp.payload`"), F.lit("[0-9a-f]{2}"), 0)
-            ).alias("b"),
-        )
-        hist = pay.groupBy("stream", "b").agg(F.count("*").alias("c"))
-        return (
-            hist.groupBy("stream")
-            .agg(
-                F.sum("c").cast("bigint").alias("n_bytes"),
-                F.count("*").cast("bigint").alias("n_distinct_bytes"),
-                F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clc"),
-            )
-            .select(
-                "stream", "n_bytes", "n_distinct_bytes",
-                F.round(
-                    F.log2("n_bytes")
-                    - F.col("_clc") / F.col("n_bytes").cast("double"),
-                    4,
-                ).alias("entropy_bits"),
-            )
-            .select(
-                "stream", "n_bytes", "n_distinct_bytes", "entropy_bits",
-                (F.col("entropy_bits") >= 7.0).alias("is_high_entropy"),
-            )
-        )
-
-    @query("pcap_follow_tcp_stream", oracle=None, tags=("pcap", "analysis"))
-    def pcap_follow_tcp_stream(spark: SparkSession, sf: str) -> DataFrame:
-        """Wireshark's "Follow TCP Stream" as a query: reassemble each
-        direction's payload bytes in sequence order, retransmissions
-        deduplicated, and emit length + md5 of the reconstructed byte
-        stream (the md5 is the joinable content identity — IDS rules,
-        malware hashes, transcript dedup all key on it).
-
-        Scale: retransmission dedup and reassembly both key on (stream,
-        direction) — ONE keyed shuffle; ordering happens inside each
-        group via array_sort of (seq, payload) structs, never a global
-        sort. Holes (lost captures) surface as n_bytes < expected rather
-        than silently concatenating across gaps: contiguity is reported
-        via the contiguous flag comparing span to byte count.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import session_capture
-
-        cap = session_capture(
-            os.path.join(cache_dir(), "synth", "session.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tcp"], engine="native")
-        segs = (
-            t.filter(F.col("`tcp.len`") > 0)
-            .select(
-                F.col("`tcp.stream`").alias("stream"),
-                F.col("`ip.src`").alias("src"),
-                F.col("`tcp.srcport`").alias("sport"),
-                F.col("`tcp.seq`").alias("seq"),
-                F.col("`tcp.len`").alias("seg_len"),
-                F.col("`tcp.payload`").alias("payload"),
-            )
-            .dropDuplicates(["stream", "src", "sport", "seq", "payload"])
-        )
-        return (
-            segs.groupBy("stream", "src", "sport")
-            .agg(
-                F.count("*").cast("bigint").alias("n_segments"),
-                F.sum("seg_len").cast("bigint").alias("n_bytes"),
-                F.min("seq").alias("_seq_lo"),
-                F.max(F.col("seq") + F.col("seg_len")).alias("_seq_hi"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("seq", "payload"))),
-                        lambda s: s.getField("payload"),
-                    ),
-                    "",
-                ).alias("_hex"),
-            )
-            .select(
-                "stream", "src", "sport", "n_segments", "n_bytes",
-                (F.col("_seq_hi") - F.col("_seq_lo") == F.col("n_bytes"))
-                .alias("contiguous"),
-                F.md5(F.to_binary(F.col("_hex"), F.lit("hex")))
-                .alias("content_md5"),
-            )
-        )
-
-    @query("pcap_dns_tunneling_detect", oracle=None,
-           tags=("pcap", "analysis"))
-    def pcap_dns_tunneling_detect(spark: SparkSession, sf: str) -> DataFrame:
-        """DNS-tunneling detection per registered domain (last two
-        labels): exfil tunnels show many DISTINCT long subdomains under
-        one zone at sustained rate, where benign traffic re-asks a few
-        short names. Flags zones with >= 20 distinct subdomains AND
-        average qname length >= 40 — the iodine/dnscat2 signature.
-
-        Scale: one keyed aggregate on the registered domain (zone count
-        is tiny); qname parsing is a narrow regexp on the already-
-        dissected dns.qry.name column, no packet payload moves.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import dns_tunnel_capture
-
-        cap = dns_tunnel_capture(
-            os.path.join(cache_dir(), "synth", "dnstunnel.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "dns"],
-                      engine="native")
-        q = t.filter(
-            F.col("`dns.qry.name`").isNotNull()
-            & ~F.col("`dns.flags.response`")
-        ).select(
-            F.col("`dns.qry.name`").alias("qname"),
-            F.regexp_extract(
-                F.col("`dns.qry.name`"),
-                r"([A-Za-z0-9-]+\.[A-Za-z0-9-]+)$", 1,
-            ).alias("zone"),
-            F.col("`frame.time_epoch`").alias("ts"),
-        )
-        return (
-            q.groupBy("zone")
-            .agg(
-                F.count("*").cast("bigint").alias("n_queries"),
-                F.count_distinct("qname").cast("bigint")
-                .alias("n_distinct_subdomains"),
-                F.expr("sum(length(qname)) div count(*)").cast("bigint")
-                .alias("avg_qname_len"),
-                F.max(F.length("qname")).cast("bigint")
-                .alias("max_qname_len"),
-            )
-            .select(
-                "*",
-                ((F.col("n_distinct_subdomains") >= 20)
-                 & (F.col("avg_qname_len") >= 40)).alias("is_suspected"),
-            )
-        )
-
-    @query("pcap_vxlan_decap", oracle=None, tags=("pcap", "dissect"))
-    def pcap_vxlan_decap(spark: SparkSession, sf: str) -> DataFrame:
-        """Overlay-network traffic accounting AFTER VXLAN decapsulation:
-        per (VNI, inner 5-tuple) packet/byte rollup. The decap walk in
-        the native dissector makes the inner flow the analytic identity
-        (tenants reuse RFC1918 space, so outer headers alone cannot
-        attribute traffic); un-tunneled underlay rows keep a NULL VNI.
-
-        Scale: decapsulation is per-packet narrow work inside the scan;
-        this rollup is one keyed aggregate on (vni, stream).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import vxlan_capture
-
-        cap = vxlan_capture(
-            os.path.join(cache_dir(), "synth", "vxlan.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tcp", "vxlan"],
-                      engine="native")
-        return (
-            t.filter(F.col("`tcp.srcport`").isNotNull())
-            .groupBy(
-                F.col("`vxlan.vni`").alias("vni"),
-                F.col("`ip.src`").alias("src"),
-                F.col("`ip.dst`").alias("dst"),
-                F.col("`tcp.srcport`").alias("sport"),
-                F.col("`tcp.dstport`").alias("dport"),
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
-                F.min("`vxlan.outer_ip_src`").alias("outer_src"),
-            )
-        )
-
-    @query("pcap_quic_handshakes", oracle=None, tags=("pcap", "dissect"))
-    def pcap_quic_handshakes(spark: SparkSession, sf: str) -> DataFrame:
-        """QUIC connection inventory from long-header packets: per
-        (version, client DCID) the packet-type mix (Initial/Handshake)
-        and whether the server answered with Version Negotiation — the
-        modern-web visibility check a TLS/SNI-only dissector misses
-        entirely once traffic moves to HTTP/3.
-
-        Long headers are parsed natively (quic.version/dcid/scid/
-        long.packet_type, tshark field names); short-header 1-RTT
-        packets are deliberately unclaimed (no wire-visible DCID
-        length — sources/native.py deviation note). Scale: header
-        parse is narrow per-packet work in the scan; this rollup is
-        one keyed aggregate on (version, dcid).
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import quic_capture
-
-        cap = quic_capture(
-            os.path.join(cache_dir(), "synth", "quic.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
-                      engine="native")
-        return (
-            t.filter(F.col("`quic.version`").isNotNull())
-            .groupBy(
-                F.col("`quic.version`").alias("version"),
-                F.col("`quic.dcid`").alias("dcid"),
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.sum(
-                    F.when(F.col("`quic.long.packet_type`") == 0, 1)
-                    .otherwise(0)
-                ).cast("bigint").alias("n_initial"),
-                F.sum(
-                    F.when(F.col("`quic.long.packet_type`") == 2, 1)
-                    .otherwise(0)
-                ).cast("bigint").alias("n_handshake"),
-                F.max(
-                    (F.col("`quic.version`") == 0).cast("int")
-                ).cast("bigint").alias("version_negotiation"),
-            )
-            .orderBy("version", "dcid")
-        )
-
-    @query("pcap_quic_vn_downgrade", oracle=None,
-           tags=("pcap", "dissect", "security"))
-    def pcap_quic_vn_downgrade(spark: SparkSession, sf: str) -> DataFrame:
-        """QUIC Version-Negotiation downgrade detection: per client,
-        the version first offered, whether a VN packet came back, the
-        version of the first post-VN retry Initial, and a downgrade
-        flag — set when a client that offered a KNOWN version was
-        moved to a LOWER one by VN (RFC 9000 §6.3 forbids exactly
-        this: VN exists for unknown versions, so v2->VN->v1 is the
-        on-path downgrade-attack signature, while unknown->VN->v1 is
-        the legitimate negotiation).
-
-        Scale: Initials and VN packets reduce to two client-keyed
-        aggregates plus one client-keyed join — no windows over the
-        packet stream, no driver logic; at capture scale the heavy
-        lifting stays in the per-packet header parse inside the scan.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import quic_vn_capture
-
-        cap = quic_vn_capture(
-            os.path.join(cache_dir(), "synth", "quic_vn.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
-                      engine="native")
-        q = t.filter(F.col("`quic.version`").isNotNull()).select(
-            F.col("`frame.time_epoch`").alias("ft"),
-            F.col("`ip.src`").alias("src"),
-            F.col("`ip.dst`").alias("dst"),
-            F.col("`udp.dstport`").alias("dport"),
-            F.col("`quic.version`").cast("bigint").alias("version"),
-            F.col("`quic.long.packet_type`").alias("ptype"),
-        )
-        # client-sent Initials carry the offered version; VN packets
-        # (version 0) travel server->client, so the client is ip.dst.
-        # Real QUIC servers ALSO send Initial packets (server->client in
-        # the handshake), so Initials are restricted to the client
-        # direction (udp.dstport == 443) — otherwise the server IP would
-        # surface as a bogus client whose "first_version" is meaningless.
-        # The streaming twin (streaming/pcap_stream.py) applies the same
-        # direction gate.
-        initials = q.filter(
-            (F.col("version") != 0) & (F.col("ptype") == 0)
-            & (F.col("dport") == 443)
-        ).select(F.col("src").alias("client"), "version", "ft")
-        vn = (
-            q.filter(F.col("version") == 0)
-            .groupBy(F.col("dst").alias("client"))
-            .agg(F.min("ft").alias("vn_ft"))
-        )
-
-        def vrank(col):
-            # semantic version order (numeric compare is meaningless:
-            # v2's wire value 0x6b3343cf dwarfs v1's 1); unknown -> 0
-            return (
-                F.when(col == 1, 1)
-                .when(col == 0x6B3343CF, 2)
-                .otherwise(0)
-            )
-
-        # ONE left join (vn consumed exactly once — reusing the same
-        # aggregate on two join branches shares attribute ids across the
-        # tree and Spark's dedup then mis-resolves later column refs) and
-        # ONE aggregate: first/retry versions come from min(struct(ft,
-        # version)) with retry gated on post-VN arrival; min ignores the
-        # NULLed-out rows, so no-VN clients keep a NULL retry.
-        agg = (
-            initials.join(vn, "client", "left")
-            .groupBy("client")
-            .agg(
-                F.min(F.struct("ft", "version")).alias("first_pkt"),
-                F.min("vn_ft").alias("vn_ft"),
-                F.min(
-                    F.when(F.col("ft") > F.col("vn_ft"),
-                           F.struct("ft", "version"))
-                ).alias("retry_pkt"),
-            )
-        )
-        first_v = F.col("first_pkt").getField("version")
-        retry_v = F.col("retry_pkt").getField("version")
-        return agg.select(
-            "client",
-            first_v.alias("first_version"),
-            F.col("vn_ft").isNotNull().cast("int").cast("bigint")
-            .alias("vn_received"),
-            retry_v.alias("retry_version"),
-            (
-                F.col("vn_ft").isNotNull()
-                & retry_v.isNotNull()
-                & (vrank(first_v) > 0)
-                & (vrank(retry_v) < vrank(first_v))
-            ).cast("int").cast("bigint").alias("downgrade"),
-        ).orderBy("client")
-
-    @query("pcap_traceroute_path", oracle=None, tags=("pcap", "analysis"))
-    def pcap_traceroute_path(spark: SparkSession, sf: str) -> DataFrame:
-        """Traceroute path reconstruction from a passive capture: UDP
-        probes (classic 33434+ destination ports) carry increasing TTLs;
-        each ICMP time-exceeded / port-unreachable is attributed to the
-        most recent preceding probe from the same client — yielding
-        (hop number, router, RTT) without running traceroute again.
-
-        Scale: probes and ICMP replies key on the CLIENT address (probe
-        ip.src == reply ip.dst), so the as-of matching is last_value
-        windows over one client-keyed union — the join_asof rewrite, one
-        shuffle, no time-range cross product.
-        """
-        from pyspark.sql.window import Window
-
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import traceroute_capture
-
-        cap = traceroute_capture(
-            os.path.join(cache_dir(), "synth", "traceroute.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "icmp"],
-                      engine="native")
-        probes = t.filter(
-            (F.col("`udp.dstport`") >= 33434)
-            & (F.col("`udp.dstport`") <= 33600)
-        ).select(
-            F.col("`ip.src`").alias("client"),
-            F.col("`frame.time_epoch`").alias("ts"),
-            F.lit("probe").alias("kind"),
-            F.col("`ip.ttl`").alias("probe_ttl"),
-            F.lit(None).cast("string").alias("router"),
-            F.lit(None).cast("bigint").alias("icmp_type"),
-        )
-        resps = t.filter(F.col("`icmp.type`").isin(11, 3)).select(
-            F.col("`ip.dst`").alias("client"),
-            F.col("`frame.time_epoch`").alias("ts"),
-            F.lit("resp").alias("kind"),
-            F.lit(None).cast("bigint").alias("probe_ttl"),
-            F.col("`ip.src`").alias("router"),
-            F.col("`icmp.type`").cast("bigint").alias("icmp_type"),
-        )
-        merged = probes.unionByName(resps)
-        w = (
-            Window.partitionBy("client")
-            .orderBy("ts", "kind")  # 'probe' < 'resp' breaks ts ties
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        attributed = merged.select(
-            "*",
-            F.last("probe_ttl", ignorenulls=True).over(w).alias("hop"),
-            F.last(
-                F.when(F.col("kind") == "probe", F.col("ts")),
-                ignorenulls=True,
-            ).over(w).alias("probe_ts"),
-        ).filter(F.col("kind") == "resp")
-        return attributed.select(
-            "client",
-            F.col("hop").cast("bigint"),
-            "router",
-            (
-                (F.unix_micros("ts") - F.unix_micros("probe_ts"))
-            ).cast("bigint").alias("rtt_us"),
-            (F.col("icmp_type") == 3).alias("is_destination"),
-        )
-
-    @query("pcap_filter_and_save", oracle=None, tags=("pcap", "sink"))
-    def pcap_filter_and_save(spark: SparkSession, sf: str) -> DataFrame:
-        """Filter-and-save: keep one flow of a capture with a DataFrame
-        filter, WRITE it back as a valid pcap via the pcap sink
-        (df.write.format('pcap')), then re-read the written capture and
-        roll it up — the replay/evidence-extraction workflow the
-        reference cannot express (it has no writer at all).
-
-        Scale: the write is embarrassingly parallel (one part-file per
-        task, atomic rename publish); the re-read is the ordinary
-        multi-file scan, one partition per part.
-        """
-        import tempfile
-
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.native import stream_id
-        from wireduck_spark.sources.synth import session_capture
-
-        cap = session_capture(
-            os.path.join(cache_dir(), "synth", "session.pcap"))
-        full = read_pcap(spark, cap, protocols=["frame", "ip", "tcp"],
-                         engine="native")
-        target = stream_id("10.0.1.1", 40001, "10.0.2.1", 80)
-        out_dir = os.path.join(tempfile.gettempdir(),
-                               "wireduck_filter_save_q")
-        (
-            full.filter(F.col("`tcp.stream`") == target)
-            .select("`frame.time_epoch`", "`frame.raw`")
-            .write.format("pcap").mode("overwrite").save(out_dir)
-        )
-        reread = read_pcap(spark, f"{out_dir}/*.pcap",
-                           protocols=["ip", "tcp"], engine="native")
-        return reread.groupBy(
-            F.col("`ip.src`").alias("src"),
-            F.col("`tcp.srcport`").alias("sport"),
-        ).agg(
-            F.count("*").cast("bigint").alias("n_packets"),
-            F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
         )
 
     @query("pcap_capture_summary", oracle=None, tags=("pcap", "scan"))
@@ -992,99 +1309,6 @@ if _have_fixture():
                     (F.col("total_bytes") * 8 / F.col("duration_s"))
                     .cast("bigint"),
                 ).alias("avg_bits_per_s"),
-            )
-        )
-
-    @query("pcap_http_transactions", oracle=None, tags=("pcap", "analysis"))
-    def pcap_http_transactions(spark: SparkSession, sf: str) -> DataFrame:
-        """HTTP request/response pairing with latency: the k-th request
-        on a stream matches the k-th response (HTTP/1.1 pipelining
-        ordering guarantee) — per-transaction method, URI, status, and
-        time-to-first-byte, the per-hit web log reconstructed from
-        packets.
-
-        Scale: both sides get their per-stream ordinal from ONE
-        stream-keyed window exchange; the pairing is a (stream, ordinal)
-        equi-join of two small projected slices, never a self-join of
-        the capture.
-        """
-        from pyspark.sql.window import Window
-
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import multiproto_capture
-
-        cap = multiproto_capture(
-            os.path.join(cache_dir(), "synth", "multiproto.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "tcp", "http"],
-                      engine="native")
-        w_req = Window.partitionBy(F.col("`tcp.stream`")).orderBy(
-            "`frame.time_epoch`", "`frame.number`")
-        reqs = (
-            t.filter(F.col("`http.request.method`").isNotNull())
-            .select(
-                F.col("`tcp.stream`").alias("stream"),
-                F.col("`http.request.method`").alias("method"),
-                F.col("`http.request.uri`").alias("uri"),
-                F.col("`frame.time_epoch`").alias("req_ts"),
-            )
-            .withColumn("ordinal", F.row_number().over(
-                Window.partitionBy("stream").orderBy("req_ts")))
-        )
-        resps = (
-            t.filter(F.col("`http.response.code`").isNotNull())
-            .select(
-                F.col("`tcp.stream`").alias("r_stream"),
-                F.col("`http.response.code`").alias("status"),
-                F.col("`frame.time_epoch`").alias("resp_ts"),
-            )
-            .withColumn("r_ordinal", F.row_number().over(
-                Window.partitionBy("r_stream").orderBy("resp_ts")))
-        )
-        _ = w_req  # alias kept for readability of the window contract
-        return (
-            reqs.join(
-                resps,
-                (reqs.stream == resps.r_stream)
-                & (reqs.ordinal == resps.r_ordinal),
-                "left",
-            )
-            .select(
-                "stream", "ordinal", "method", "uri", "status",
-                (F.unix_micros("resp_ts") - F.unix_micros("req_ts"))
-                .cast("bigint").alias("latency_us"),
-            )
-        )
-
-    @query("pcap_ipv6_traffic", oracle=None, tags=("pcap", "dissect"))
-    def pcap_ipv6_traffic(spark: SparkSession, sf: str) -> DataFrame:
-        """Dual-stack traffic rollup: per address-family packet/byte
-        counts plus per-IPv6-endpoint-pair totals — exercises the v6
-        dissection path (40-byte fixed header, ext-header walk) through
-        a registered gate query rather than unit tests alone.
-
-        Scale: one keyed aggregate; family derives narrowly from which
-        address column is non-null.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import ipv6_capture
-
-        cap = ipv6_capture(
-            os.path.join(cache_dir(), "synth", "ipv6.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "ipv6", "udp", "tcp"],
-                      engine="native")
-        fam = F.when(F.col("`ipv6.src`").isNotNull(), "ipv6").otherwise(
-            F.when(F.col("`ip.src`").isNotNull(), "ipv4").otherwise("other"))
-        return (
-            t.groupBy(
-                fam.alias("family"),
-                F.coalesce(F.col("`ipv6.src`"), F.col("`ip.src`"))
-                .alias("src"),
-                F.coalesce(F.col("`ipv6.dst`"), F.col("`ip.dst`"))
-                .alias("dst"),
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.sum("`frame.len`").cast("bigint").alias("total_bytes"),
             )
         )
 
@@ -1135,101 +1359,6 @@ if _have_fixture():
                 F.sum("`tcp.len`").cast("bigint").alias("payload_bytes"),
             )
             .orderBy("service")
-        )
-
-    @query("pcap_quic_federation", oracle=None,
-           tags=("pcap", "join", "federation", "dissect"))
-    def pcap_quic_federation(spark: SparkSession, sf: str) -> DataFrame:
-        """HTTP/3 federation: QUIC long-header traffic joined to a
-        parquet edge-catalog dimension (server IP -> tenant) — the
-        pcap_lake_federation pitch extended to the protocol where
-        TLS/SNI dissection goes dark (QUIC encrypts the ClientHello
-        into the Initial packet). Per (tenant, version): packets and
-        DISTINCT connection attempts (DCIDs), the rollup an edge
-        operator reads during a version rollout.
-
-        Scale: same shape as the TCP federation — broadcast dim onto
-        the split-parallel capture scan, one keyed aggregate; the
-        distinct-DCID count rides the same shuffle.
-        """
-        from wireduck_spark.sources.glossary import (cache_dir,
-                                                     spark_scratch_dir)
-        from wireduck_spark.sources.synth import quic_capture
-
-        catalog_path = os.path.join(spark_scratch_dir(),
-                                    "edge_catalog.parquet")
-        spark.createDataFrame(
-            [("203.0.113.80", "cloud-edge-1")],
-            "server_ip STRING, tenant STRING",
-        ).coalesce(1).write.mode("overwrite").parquet(catalog_path)
-        dim = spark.read.parquet(catalog_path)
-        cap = quic_capture(
-            os.path.join(cache_dir(), "synth", "quic.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "quic"],
-                      engine="native").filter(
-            F.col("`quic.version`").isNotNull())
-        server_ip = F.when(
-            F.col("`udp.dstport`") == 443, F.col("`ip.dst`")
-        ).otherwise(F.col("`ip.src`"))
-        return (
-            t.withColumn("server_ip", server_ip)
-            .join(F.broadcast(dim), "server_ip", "left")
-            .groupBy(
-                F.coalesce(F.col("tenant"), F.lit("unknown"))
-                .alias("tenant"),
-                F.col("`quic.version`").alias("version"),
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.countDistinct("`quic.dcid`").cast("bigint")
-                .alias("n_dcids"),
-            )
-            .orderBy("tenant", "version")
-        )
-
-    @query("pcap_service_inventory", oracle=None,
-           tags=("pcap", "dissect", "security"))
-    def pcap_service_inventory(spark: SparkSession, sf: str) -> DataFrame:
-        """Cleartext-service inventory: SSH software banners, SMTP and
-        FTP command/response traffic rolled up per (server, service) —
-        the audit that finds the dropbear box and the anonymous-FTP
-        login nobody remembers deploying. Banner protocols are the
-        long tail TLS never hides; one narrow dissection pass feeds one
-        keyed aggregate.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import services_capture
-
-        cap = services_capture(
-            os.path.join(cache_dir(), "synth", "services.pcap"))
-        t = read_pcap(spark, cap,
-                      protocols=["ip", "tcp", "ssh", "smtp", "ftp"],
-                      engine="native")
-        service = (
-            F.when(F.col("`ssh.protocol`").isNotNull(), "ssh")
-            .when(F.col("`smtp.response.code`").isNotNull()
-                  | F.col("`smtp.req.command`").isNotNull(), "smtp")
-            .when(F.col("`ftp.response.code`").isNotNull()
-                  | F.col("`ftp.request.command`").isNotNull(), "ftp")
-        )
-        server = F.when(
-            F.col("`tcp.srcport`").isin(21, 22, 25), F.col("`ip.src`")
-        ).otherwise(F.col("`ip.dst`"))
-        return (
-            t.withColumn("service", service)
-            .filter(F.col("service").isNotNull())
-            .groupBy(server.alias("server"), "service")
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.min("`ssh.protocol`").alias("ssh_banner"),
-                F.countDistinct(
-                    F.coalesce(
-                        F.col("`smtp.req.command`"),
-                        F.col("`ftp.request.command`"),
-                    )
-                ).cast("bigint").alias("n_distinct_commands"),
-            )
-            .orderBy("server", "service")
         )
 
     @query("pcap_capture_compare", oracle=None,
@@ -1364,95 +1493,6 @@ if _have_fixture():
             )
             .agg(F.count("*").cast("bigint").alias("n_syn"))
             .orderBy("src", "mss")
-        )
-
-    @query("pcap_ntp_clock_skew", oracle=None,
-           tags=("pcap", "analysis", "dissect"))
-    def pcap_ntp_clock_skew(spark: SparkSession, sf: str) -> DataFrame:
-        """Passive NTP clock-skew audit: every NTP packet carries the
-        sender's transmit timestamp (ntp.xmt), so xmt minus the capture
-        timestamp IS the sender's clock offset from the capture box —
-        per host the fleet's time hygiene falls out of traffic you were
-        already capturing (clients in mode 3, servers in mode 4, plus
-        the advertised stratum). The classic use: find the machine
-        whose TLS tickets keep expiring because its clock runs fast.
-
-        Skews are exact integer microseconds (both timestamps are
-        integer-microsecond fields); the mean is a truncating integer
-        div. Scale: narrow per-packet header parse in the scan, one
-        (host, role)-keyed aggregate.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import ntp_capture
-
-        cap = ntp_capture(os.path.join(cache_dir(), "synth", "ntp.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "ntp"],
-                      engine="native")
-        n = t.filter(F.col("`ntp.flags.mode`").isNotNull()).select(
-            F.col("`ip.src`").alias("host"),
-            F.when(F.col("`ntp.flags.mode`") == 3, F.lit("client"))
-            .otherwise(F.lit("server")).alias("role"),
-            F.col("`ntp.stratum`").alias("stratum"),
-            (
-                F.unix_micros(F.col("`ntp.xmt`"))
-                - F.unix_micros(F.col("`frame.time_epoch`"))
-            ).alias("skew_us"),
-        )
-        return (
-            n.groupBy("host", "role")
-            .agg(
-                F.count("*").cast("bigint").alias("n_packets"),
-                F.min("stratum").cast("bigint").alias("stratum"),
-                F.expr("CAST(sum(skew_us) div count(*) AS BIGINT)")
-                .alias("mean_skew_us"),
-            )
-            .orderBy("host", "role")
-        )
-
-    @query("pcap_dhcp_lease_inventory", oracle=None,
-           tags=("pcap", "analysis", "dissect"))
-    def pcap_dhcp_lease_inventory(spark: SparkSession, sf: str) -> DataFrame:
-        """DHCP lease inventory from passive capture: per client MAC the
-        DORA message-type counts (discover/offer/request/ack/nak) and
-        the currently-leased address (yiaddr of the LAST ACK — the
-        max-by-time struct fold, no window) — who is on the network and
-        which requests the server refused, from broadcast traffic every
-        segment sees for free.
-
-        Scale: per-packet BOOTP/option-53 parse in the scan; one
-        MAC-keyed aggregate with conditional counts, all combinable.
-        """
-        from wireduck_spark.sources.glossary import cache_dir
-        from wireduck_spark.sources.synth import dhcp_capture
-
-        cap = dhcp_capture(os.path.join(cache_dir(), "synth", "dhcp.pcap"))
-        t = read_pcap(spark, cap, protocols=["ip", "udp", "dhcp"],
-                      engine="native")
-        d = t.filter(F.col("`dhcp.option.dhcp`").isNotNull()).select(
-            F.col("`dhcp.hw.mac_addr`").alias("mac"),
-            F.col("`dhcp.option.dhcp`").alias("msg"),
-            F.col("`frame.time_epoch`").alias("ft"),
-            F.col("`dhcp.ip.your`").alias("yiaddr"),
-        )
-
-        def n_of(code, name):
-            return F.sum(F.when(F.col("msg") == code, 1).otherwise(0)) \
-                .cast("bigint").alias(name)
-
-        lease = F.max(
-            F.when(F.col("msg") == 5, F.struct("ft", "yiaddr"))
-        ).getField("yiaddr")
-        return (
-            d.groupBy("mac")
-            .agg(
-                n_of(1, "n_discover"),
-                n_of(2, "n_offer"),
-                n_of(3, "n_request"),
-                n_of(5, "n_ack"),
-                n_of(6, "n_nak"),
-                F.coalesce(lease, F.lit("none")).alias("leased_ip"),
-            )
-            .orderBy("mac")
         )
 
     @query("pcap_flow_export_sink", oracle=None, tags=("pcap", "sink"))
