@@ -134,24 +134,24 @@ def build_pcapng(
     runs long dumpcap captures interleave between packets)."""
     shb = pcapng_block(0x0A0D0D0A, struct.pack("<IHHq", 0x1A2B3C4D, 1, 0, -1))
     idb = pcapng_block(0x00000001, struct.pack("<HHI", linktype, 0, snaplen))
-    out = shb + idb
+    out = [shb, idb]
     for i, (ts, data) in enumerate(frames):
         if spb:
             body = struct.pack("<I", len(data)) + data
-            out += pcapng_block(0x00000003, body)
+            out.append(pcapng_block(0x00000003, body))
         else:
             us = int(round(ts * 1_000_000))
             body = struct.pack(
                 "<IIIII", 0, us >> 32, us & 0xFFFFFFFF, len(data), len(data)
             ) + data
-            out += pcapng_block(0x00000006, body)
+            out.append(pcapng_block(0x00000006, body))
         if i == 0:
             remaining = mid_filler_bytes
             while remaining > 0:
                 chunk = min(remaining, 65536)
-                out += pcapng_block(0x00000004, bytes(chunk))
+                out.append(pcapng_block(0x00000004, bytes(chunk)))
                 remaining -= chunk + 12
-    return out
+    return b"".join(out)
 
 
 def build_pcap(
@@ -161,13 +161,13 @@ def build_pcap(
 ) -> bytes:
     """frames: [(epoch_ts, frame_bytes)] -> classic libpcap bytes."""
     magic = 0xA1B23C4D if nanos else 0xA1B2C3D4
-    out = struct.pack("<IHHiIII", magic, 2, 4, 0, 0, snaplen, 1)
+    out = [struct.pack("<IHHiIII", magic, 2, 4, 0, 0, snaplen, 1)]
     mult = 1_000_000_000 if nanos else 1_000_000
     for ts, data in frames:
         sec = int(ts)
         frac = int(round((ts - sec) * mult))
-        out += struct.pack("<IIII", sec, frac, len(data), len(data)) + data
-    return out
+        out += (struct.pack("<IIII", sec, frac, len(data), len(data)), data)
+    return b"".join(out)
 
 
 def two_flow_pcap() -> bytes:

@@ -22,6 +22,7 @@ partition-count tuned via ``session.get_spark``).
 """
 
 import os as _os
+import sys as _sys
 
 # Make this package importable inside Spark's Python WORKER processes no
 # matter where the driver process was launched from. Workers inherit the
@@ -82,3 +83,55 @@ __all__ = [
     "register_pcap_source",
     "__version__",
 ]
+
+
+def _guard_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_ino, st_mtime_ns, st_size)`` changed since this process last
+    read it. PySpark calls ``importlib.invalidate_caches()`` at the start
+    of every Python task (pyspark/worker_util.py); stdlib then re-parses
+    the whole central directory of the spark-core jar and pyspark.zip
+    once per zipimporter, 0.15-0.2 s of CPU per task. Archives already
+    cached are stamped now: in a worker, this task's own invalidation or
+    the package's imports read them moments ago. A missing archive or a
+    failed ``stat`` falls through to the stdlib method. Idempotent."""
+    import zipimport
+
+    stdlib = zipimport.zipimporter.invalidate_caches
+    if getattr(stdlib, "_stat_guarded", False):
+        return
+    stamps = {}
+
+    def stamp(archive):
+        st = _os.stat(archive)
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
+    for archive in zipimport._zip_directory_cache:
+        try:
+            stamps[archive] = stamp(archive)
+        except OSError:
+            pass
+
+    def invalidate_caches(self):
+        try:
+            now = stamp(self.archive)
+        except OSError:
+            return stdlib(self)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stamps.get(self.archive) == now:
+            self._files = files
+            return
+        stdlib(self)  # stamped before the read: a later write re-reads
+        stamps[self.archive] = now
+
+    invalidate_caches._stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+# Spark's Python workers run as `python -m pyspark.daemon` (or
+# `pyspark.worker` without the daemon); the driver never does, so it
+# keeps the stdlib method. Installed after the imports above, so the
+# archives they opened (the shipped package zip among them) are stamped.
+if (getattr(getattr(_sys.modules.get("__main__"), "__spec__", None),
+            "name", None) or "").startswith("pyspark."):
+    _guard_zip_directories()

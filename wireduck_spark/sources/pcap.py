@@ -74,16 +74,12 @@ from wireduck_spark.sources.typemap import cast_cell, map_ft_type
 # The byte-range split rule of both readers (batch and stream), native and
 # split-tshark engines: a capture larger than SPLIT_BYTES is cut into
 # ceil(size / SPLIT_BYTES) slices, one Python task each (the
-# `split_threshold` option overrides it per read). The size is set by the
-# fixed cost of a task, not by the dissect work. Every Python task
-# starts with importlib.invalidate_caches() (pyspark worker_util), which
-# makes each of the 16 zip importers on the worker's path (over the
-# spark-core jar and pyspark.zip) re-parse its archive's central
-# directory in pure Python: 0.15-0.2 s of worker CPU per task, and an
-# empty 32-task job takes 2.9 s against 0.3 s for 3 tasks (local[3],
-# 4 vCPUs). A 32 MiB slice is 1-1.5 s of dissect work, so that cost stays
-# a small share of each task while a 64 MiB capture still spreads over
-# several cores.
+# `split_threshold` option overrides it per read). On two 64.5 MiB
+# captures (pcap + pcapng, local[3], 4 vCPUs) 32 MiB gave the fastest
+# read of 8, 16, 32 and 64 MiB: an op took 2.0 s in 6 tasks, against
+# 2.3 s in 18 or 10 tasks with 12-25% more CPU, and 2.7 s in 4 tasks on
+# 3 cores; Python workers re-read no zip directory per task
+# (wireduck_spark/__init__.py), so a slice pays only Spark's task cost.
 SPLIT_BYTES = 32 * 1024 * 1024
 
 # Rows per Arrow RecordBatch emitted by read() — the Python<->JVM transfer
