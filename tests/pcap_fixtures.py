@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import struct
 
+from wireduck_spark.sources.synth import pcap_bytes
+
 
 def ipv4_checksum_stub() -> int:
     return 0  # checksum validity is not dissected
@@ -160,14 +162,7 @@ def build_pcap(
     snaplen: int = 262144,
 ) -> bytes:
     """frames: [(epoch_ts, frame_bytes)] -> classic libpcap bytes."""
-    magic = 0xA1B23C4D if nanos else 0xA1B2C3D4
-    out = [struct.pack("<IHHiIII", magic, 2, 4, 0, 0, snaplen, 1)]
-    mult = 1_000_000_000 if nanos else 1_000_000
-    for ts, data in frames:
-        sec = int(ts)
-        frac = int(round((ts - sec) * mult))
-        out += (struct.pack("<IIII", sec, frac, len(data), len(data)), data)
-    return b"".join(out)
+    return pcap_bytes(frames, nanos=nanos, snaplen=snaplen)
 
 
 def two_flow_pcap() -> bytes:

@@ -500,7 +500,9 @@ def _tcp_l7(payload: bytes, sport: int, dport: int,
     vectorized batch path can run it per payload row without re-doing
     the fixed-header work; the port-gated middle section is a lookup
     table in the chain's original order). Returns the protocol label
-    to append, or None."""
+    to append, or None. native_vec's prescreen skips the rows none of
+    these probes can claim: a new probe must be port-gated through the
+    table (or 4222/53 here), or widen that prescreen."""
     if 4222 in (sport, dport) and _dissect_nats(payload, fields):
         # NATS before generic HTTP: its CONNECT {json} line
         # collides with the HTTP CONNECT method on 4222
@@ -542,6 +544,20 @@ def _tcp_l7(payload: bytes, sport: int, dport: int,
     return None
 
 
+# Every port a branch of _udp_payload_chain is gated on, except QUIC's
+# 443, whose branch also needs a long header. native_vec's prescreen
+# sends a payload row through the chain when either port is in this
+# set; on any other port only the QUIC, STUN and DTLS branches can
+# claim it, and the prescreen tests their header bytes itself. A port
+# added to the chain must be added here (tests/test_native_vec.py reads
+# the chain's port literals and checks).
+_UDP_GATED_PORTS = frozenset((
+    53, 5353, 123, 67, 68, 4789, 5355, 5060, 161, 162, 514, 69, 1812,
+    1813, 51820, 2152, 88, 137, 520, 500, 4500, 1701, 47808, 5683,
+    11211, 20000, 1900,
+))
+
+
 def _udp_payload_chain(data: bytes, off: int, payload: bytes,
                        sport: int, dport: int, protos: list,
                        fields: dict) -> None:
@@ -554,7 +570,9 @@ def _udp_payload_chain(data: bytes, off: int, payload: bytes,
 
     The vectorized caller passes a fresh `fields` dict, so no other
     branch may read an earlier layer's fields; a new branch that does
-    (or rewrites them) must add its ports to native_vec's ``udp_fb``."""
+    (or rewrites them) must add its ports to native_vec's ``udp_fb``.
+    The caller also skips rows its prescreen rules out, so a new port
+    branch must add its port to ``_UDP_GATED_PORTS``."""
     if (sport in (53, 5353) or dport in (53, 5353)) and len(payload) >= 12:
         proto_name = "mdns" if 5353 in (sport, dport) else "dns"
         if _dissect_dns(payload, fields):
@@ -1499,17 +1517,19 @@ def _dissect_telnet(payload: bytes, fields: dict) -> bool:
     return True
 
 
+_HTTP2_PREFACE = b"PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n"
+
+
 def _dissect_http2(payload: bytes, fields: dict) -> bool:
     """HTTP/2 connection preface (`PRI * HTTP/2.0`) on any TCP port —
     the only h2 artifact recognizable without connection state; the
     SETTINGS frame that must follow is parsed when present
     (http2.type/http2.length/http2.streamid). Claimed only on the
     literal 24-byte preface, never on bare binary frames."""
-    preface = b"PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n"
-    if not payload.startswith(preface):
+    if not payload.startswith(_HTTP2_PREFACE):
         return False
     fields["_ws.col.info"] = "HTTP/2 Connection Preface"
-    rest = payload[len(preface):]
+    rest = payload[len(_HTTP2_PREFACE):]
     if len(rest) >= 9:
         fields["http2.length"] = int.from_bytes(rest[0:3], "big")
         fields["http2.type"] = rest[3]
@@ -1831,12 +1851,15 @@ def _dissect_tacplus(payload: bytes, fields: dict) -> bool:
     return True
 
 
+_STUN_COOKIE = b"\x21\x12\xa4\x42"
+
+
 def _dissect_stun(payload: bytes, fields: dict) -> bool:
     """STUN (RFC 5389) on any UDP port — ICE/WebRTC candidates ride
     ephemeral ports, so the gate is the magic cookie 0x2112A442 plus
     the zero top type bits and a 4-aligned length matching the
     datagram (tshark stun.type / stun.length)."""
-    if len(payload) < 20 or payload[4:8] != b"\x21\x12\xa4\x42":
+    if len(payload) < 20 or payload[4:8] != _STUN_COOKIE:
         return False
     mtype = int.from_bytes(payload[0:2], "big")
     length = int.from_bytes(payload[2:4], "big")
@@ -2296,33 +2319,45 @@ def _dissect_tls(payload: bytes, fields: dict) -> bool:
     return True
 
 
+_U16 = struct.Struct(">H")
+_TLS_EXT_HDR = struct.Struct(">HH")  # extension type, length
+
+
+def _u16_list(b: bytes, off: int, nbytes: int) -> tuple:
+    """The big-endian uint16s of an ``nbytes``-long list at ``off``, in
+    one unpack, as far as ``b`` holds whole values (an odd length's last
+    value takes one byte past the list, as a 2-byte walk over it does)."""
+    k = min((nbytes + 1) // 2, (len(b) - off) // 2)
+    return struct.unpack_from(f">{k}H", b, off) if k > 0 else ()
+
+
+def _ja3_field(values) -> str:
+    """One JA3 list: dash-joined in wire order, GREASE values dropped."""
+    return "-".join([str(v) for v in values if v not in _GREASE])
+
+
 def _server_hello_ja3s(b: bytes) -> str | None:
     """JA3S string `version,cipher,extensions` from a ServerHello body
     (post handshake-header) — the server half of the JA3 pair: a C2
     server answers every implant with the same stack, so (ja3, ja3s)
     pairs fingerprint both ends of a TLS conversation."""
     try:
-        version = struct.unpack(">H", b[0:2])[0]
+        version = _U16.unpack_from(b, 0)[0]
         off = 2 + 32  # server_version + random
         off += 1 + b[off]  # session_id
-        cipher = struct.unpack(">H", b[off:off + 2])[0]
+        cipher = _U16.unpack_from(b, off)[0]
         off += 2
         off += 1  # compression method
         exts: list[int] = []
         if off + 2 <= len(b):
-            ext_total = struct.unpack(">H", b[off:off + 2])[0]
+            ext_total = _U16.unpack_from(b, off)[0]
             off += 2
             end = min(off + ext_total, len(b))
             while off + 4 <= end:
-                etype, elen = struct.unpack(">HH", b[off:off + 4])
-                off += 4
+                etype, elen = _TLS_EXT_HDR.unpack_from(b, off)
                 exts.append(etype)
-                off += elen
-        return ",".join((
-            str(version),
-            str(cipher),
-            "-".join(str(e) for e in exts if not _is_grease(e)),
-        ))
+                off += 4 + elen
+        return f"{version},{cipher},{_ja3_field(exts)}"
     except (IndexError, struct.error):
         return None
 
@@ -2334,6 +2369,10 @@ def _is_grease(v: int) -> bool:
     unequal-byte 0x?A?A value, which would silently strip a future
     legitimately-assigned codepoint from the fingerprint (r12 review)."""
     return (v & 0x0F0F) == 0x0A0A and (v >> 8) == (v & 0xFF)
+
+
+# the 16 values _is_grease accepts, for set lookups in the JA3 lists
+_GREASE = frozenset(0x0A0A + 0x1010 * k for k in range(16))
 
 
 def _client_hello_details(
@@ -2348,52 +2387,43 @@ def _client_hello_details(
     The md5 of this string is what threat-intel feeds publish.
     """
     try:
-        version = struct.unpack(">H", b[0:2])[0]
+        version = _U16.unpack_from(b, 0)[0]
         off = 2 + 32  # client_version + random
         off += 1 + b[off]  # session_id
-        cs_len = struct.unpack(">H", b[off:off + 2])[0]
+        cs_len = _U16.unpack_from(b, off)[0]
         off += 2
-        ciphers = [
-            struct.unpack(">H", b[off + i:off + i + 2])[0]
-            for i in range(0, cs_len, 2)
-            if off + i + 2 <= len(b)
-        ]
+        ciphers = _u16_list(b, off, cs_len)
         off += cs_len
         off += 1 + b[off]  # compression_methods
         sni = None
         exts: list[int] = []
-        curves: list[int] = []
-        ec_fmts: list[int] = []
+        curves: tuple = ()
+        ec_fmts = b""
         if off + 2 <= len(b):
-            ext_total = struct.unpack(">H", b[off:off + 2])[0]
+            ext_total = _U16.unpack_from(b, off)[0]
             off += 2
             end = min(off + ext_total, len(b))
             while off + 4 <= end:
-                etype, elen = struct.unpack(">HH", b[off:off + 4])
+                etype, elen = _TLS_EXT_HDR.unpack_from(b, off)
                 off += 4
                 exts.append(etype)
                 if etype == 0 and elen >= 5:  # server_name
                     # list_len(2) + type(1) + name_len(2) + name
-                    name_len = struct.unpack(">H", b[off + 3:off + 5])[0]
+                    name_len = _U16.unpack_from(b, off + 3)[0]
                     name = b[off + 5:off + 5 + name_len]
                     sni = name.decode("ascii", errors="replace")
                 elif etype == 10 and elen >= 2:  # supported_groups
-                    g_len = struct.unpack(">H", b[off:off + 2])[0]
-                    curves = [
-                        struct.unpack(">H", b[off + 2 + i:off + 4 + i])[0]
-                        for i in range(0, g_len, 2)
-                        if off + 4 + i <= len(b)
-                    ]
+                    curves = _u16_list(b, off + 2,
+                                       _U16.unpack_from(b, off)[0])
                 elif etype == 11 and elen >= 1:  # ec_point_formats
-                    f_len = b[off]
-                    ec_fmts = list(b[off + 1:off + 1 + f_len])
+                    ec_fmts = b[off + 1:off + 1 + b[off]]
                 off += elen
         ja3_str = ",".join((
             str(version),
-            "-".join(str(c) for c in ciphers if not _is_grease(c)),
-            "-".join(str(e) for e in exts if not _is_grease(e)),
-            "-".join(str(g) for g in curves if not _is_grease(g)),
-            "-".join(str(f) for f in ec_fmts),
+            _ja3_field(ciphers),
+            _ja3_field(exts),
+            _ja3_field(curves),
+            "-".join([str(f) for f in ec_fmts]),
         ))
         return sni, cs_len, ja3_str
     except (IndexError, struct.error):

@@ -118,11 +118,13 @@ def native_arrow_batches(
     r15 OPTIMIZATION (guide §4.2): record batches go through the
     VECTORIZED dissector (native_vec.batch_columns — NumPy gathers over
     one concatenated byte buffer for the fixed L2/L3/L4 headers,
-    per-packet Python only for payload probes and off-fast-path rows),
-    replacing the per-packet dict build + per-column dict.get appends
-    that dominated the old path's profile. Output is bit-identical to
-    iter_packets by construction (fallback rows literally run it);
-    pinned by tests/test_native_vec.py's full differential."""
+    per-packet Python only for the payloads an L7 probe could claim and
+    off-fast-path rows), replacing the per-packet dict build +
+    per-column dict.get appends that dominated the old path's profile.
+    A column comes back as (values, valid mask), an object ndarray or a
+    ready pa.Array. Output is bit-identical to iter_packets by
+    construction (fallback rows literally run it); pinned by
+    tests/test_native_vec.py's full differential."""
     import pyarrow as pa
 
     from wireduck_spark.sources import native_vec
@@ -140,6 +142,8 @@ def native_arrow_batches(
             if isinstance(col, tuple):
                 arr, valid = col
                 arrays.append(pa.array(arr, type=f.type, mask=~valid))
+            elif isinstance(col, pa.Array):
+                arrays.append(col.cast(f.type))
             else:
                 arrays.append(pa.array(col, type=f.type))
         return pa.RecordBatch.from_arrays(arrays, schema=aschema)

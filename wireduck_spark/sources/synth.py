@@ -68,16 +68,25 @@ def dns_query(qname: str, qtype: int = 1, dns_id: int = 0x1234) -> bytes:
         struct.pack(">HH", qtype, 1)
 
 
-def write_pcap(path: str, frames: list[tuple[float, bytes]]) -> str:
-    chunks = [struct.pack("<IHHiIII", 0xA1B2C3D4, 2, 4, 0, 0, 262144, 1)]
+def pcap_bytes(frames: list[tuple[float, bytes]], nanos: bool = False,
+               snaplen: int = 262144) -> bytes:
+    """[(epoch_ts, frame_bytes)] -> a classic little-endian Ethernet
+    libpcap capture (microsecond, or nanosecond with ``nanos``)."""
+    magic = 0xA1B23C4D if nanos else 0xA1B2C3D4
+    mult = 1_000_000_000 if nanos else 1_000_000
+    chunks = [struct.pack("<IHHiIII", magic, 2, 4, 0, 0, snaplen, 1)]
     for ts, data in frames:
         sec = int(ts)
-        frac = int(round((ts - sec) * 1_000_000))
-        chunks.append(struct.pack("<IIII", sec, frac, len(data), len(data)))
-        chunks.append(data)
+        frac = int(round((ts - sec) * mult))
+        chunks += (struct.pack("<IIII", sec, frac, len(data), len(data)),
+                   data)
+    return b"".join(chunks)
+
+
+def write_pcap(path: str, frames: list[tuple[float, bytes]]) -> str:
     tmp = path + ".tmp"
     with open(tmp, "wb") as fh:
-        fh.write(b"".join(chunks))
+        fh.write(pcap_bytes(frames))
     os.replace(tmp, path)
     return path
 
