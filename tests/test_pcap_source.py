@@ -468,6 +468,25 @@ def test_tshark_engine_with_mock(spark, pcap_file):
     assert rows[1]["_ws.col.info"] == "info2"
 
 
+@pytest.mark.parametrize("engine", ["native", "auto"])
+def test_native_engine_refuses_cfilter(pcap_file, engine, monkeypatch):
+    """The native engine has no display-filter evaluator, so a cfilter
+    fails at plan time instead of returning unfiltered rows."""
+    monkeypatch.setattr("shutil.which", lambda name: None)  # auto -> native
+    schema = pcap_mod.PcapDataSource({}).schema()
+    with pytest.raises(ValueError, match=r"'native'.*\.where\(\).*tshark"):
+        pcap_mod.PcapReader(schema, {"path": pcap_file, "engine": engine,
+                                     "cfilter": "tcp.len > 0"})
+    assert pcap_mod.PcapReader(
+        schema, {"path": pcap_file, "engine": engine}).engine == "native"
+
+
+def test_native_cfilter_fails_the_query(spark, pcap_file):
+    with pytest.raises(Exception, match="cfilter 'tcp.len > 0'"):
+        read_pcap(spark, pcap_file, protocols=["tcp"], cfilter="tcp.len > 0",
+                  engine="native").collect()
+
+
 FIELD_TYPES = {
     "tcp.srcport": "FT_UINT16", "tcp.len": "FT_UINT32",
     "ip.proto": "FT_UINT8", "udp.srcport": "FT_UINT16",

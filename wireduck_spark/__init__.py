@@ -85,6 +85,15 @@ __all__ = [
 ]
 
 
+def _in_spark_worker() -> bool:
+    """True in Spark's Python workers: they run as ``python -m
+    pyspark.daemon`` (or ``pyspark.worker`` without the daemon), the
+    planner workers as ``pyspark.daemon pyspark.sql.worker.*``. The
+    driver never does."""
+    spec = getattr(_sys.modules.get("__main__"), "__spec__", None)
+    return (getattr(spec, "name", None) or "").startswith("pyspark.")
+
+
 def _guard_zip_directories() -> None:
     """Make ``zipimporter.invalidate_caches`` re-read an archive only when
     its ``(st_ino, st_mtime_ns, st_size)`` changed since this process last
@@ -128,10 +137,76 @@ def _guard_zip_directories() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-# Spark's Python workers run as `python -m pyspark.daemon` (or
-# `pyspark.worker` without the daemon); the driver never does, so it
-# keeps the stdlib method. Installed after the imports above, so the
-# archives they opened (the shipped package zip among them) are stamped.
-if (getattr(getattr(_sys.modules.get("__main__"), "__spec__", None),
-            "name", None) or "").startswith("pyspark."):
+def _quickack(infile) -> None:
+    """Have the kernel ACK what the TCP socket behind ``infile`` has
+    received now, not after the delayed-ACK timer. The JVM writes a
+    task's command and then its small input batch; Nagle holds that
+    second segment until the first is ACKed, and Linux delays the ACK by
+    up to 40 ms. Does nothing on a non-TCP socket, a non-socket fd, a
+    file object without a fd, or where ``TCP_QUICKACK`` does not exist."""
+    import socket
+    import stat
+
+    opt = getattr(socket, "TCP_QUICKACK", None)
+    if opt is None:
+        return
+    try:
+        fd = infile.fileno()
+        # fromfd's dup leaks when its socket() fails on a non-socket fd
+        if stat.S_ISSOCK(_os.fstat(fd).st_mode):
+            with socket.fromfd(fd, socket.AF_INET, socket.SOCK_STREAM) as s:
+                s.setsockopt(socket.IPPROTO_TCP, opt, 1)
+    except (OSError, ValueError):  # no fd, or not a TCP socket
+        pass
+
+
+def _ack_after(read):
+    """``read`` (a pyspark command reader), then ``_quickack`` its
+    ``infile``; its result and its exceptions pass through unchanged."""
+    import functools
+
+    @functools.wraps(read)
+    def read_then_ack(pickleSer, infile, *args):
+        command = read(pickleSer, infile, *args)
+        _quickack(infile)
+        return command
+
+    read_then_ack._acks = True
+    return read_then_ack
+
+
+def _install_worker_fixes() -> None:
+    """The once-per-process fixes of a Spark Python worker; the driver
+    runs none of them. Called after the package's imports, so the zip
+    guard stamps the archives they opened (the shipped package zip among
+    them) and the frozen heap holds them. Idempotent: each fix checks
+    its own marker."""
+    import gc
+
     _guard_zip_directories()
+    # ACK each task's command as soon as it is read (_ack_after), so the
+    # input batch behind it leaves the JVM at once. pyspark.worker.main
+    # looks its three command readers up as module globals. The daemon
+    # imports pyspark.worker before it forks a task worker; planner
+    # workers (pyspark.sql.worker.*) never load it.
+    worker = _sys.modules.get("pyspark.worker")
+    for name in ("read_command", "read_udfs", "read_udtf"):
+        read = getattr(worker, name, None)
+        if read is not None and not getattr(read, "_acks", False):
+            setattr(worker, name, _ack_after(read))
+    # pyspark/daemon.py runs a full gc.collect() after every reused task
+    # or planner call; each re-walked the ~75k import-time objects (about
+    # 15 ms). Frozen, they are skipped; objects made later are collected
+    # as before. Every pcap read imports the batch dissector, and with it
+    # numpy, pyarrow and (through pyarrow's pandas shim) pandas; the
+    # planners' glossary read loads pandas the same way. Imported first,
+    # they are frozen with the rest.
+    import wireduck_spark.sources.native_vec  # noqa: F401
+
+    if not gc.get_freeze_count():
+        gc.collect()
+        gc.freeze()
+
+
+if _in_spark_worker():
+    _install_worker_fixes()

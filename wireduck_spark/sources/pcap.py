@@ -412,6 +412,14 @@ class PcapReader(DataSourceReader):
             import shutil
 
             engine = "tshark" if shutil.which("tshark") else "native"
+        if engine == "native" and self.cfilter:
+            # only tshark evaluates display filters; never drop one silently
+            raise ValueError(
+                f"cfilter {self.cfilter!r} is a tshark display filter and "
+                f"the engine resolved to 'native', which cannot apply it: "
+                f"filter with .where() instead, or read with "
+                f"engine='tshark'"
+            )
         self.engine = engine
         self.pushed_cfilter: str | None = None
         # test seams: reader construction happens inside Spark's Python
