@@ -1043,3 +1043,153 @@ def test_dns_name_depth_exhaustion_advances_past_pointer():
     deep = b"\x01a\xc0\x04" + b"\x01b\x00"
     name2, noff2 = _dns_name(deep, 0)
     assert name2 == "a.b" and noff2 == 4
+
+
+# ---- an independent record-walk oracle -------------------------------------
+
+def _oracle_classic(blob: bytes) -> list[tuple]:
+    """(offset, epoch_us, incl, orig, bytes) of every record of a whole
+    classic capture, one struct unpack per record."""
+    import struct
+
+    magic = blob[:4]
+    endian = "<" if magic in (b"\xd4\xc3\xb2\xa1", b"\x4d\x3c\xb2\xa1") \
+        else ">"
+    nanos = struct.unpack(endian + "I", magic)[0] == 0xA1B23C4D
+    out, off = [], 24
+    while off + 16 <= len(blob):
+        ts, frac, incl, orig = struct.unpack_from(endian + "IIII", blob, off)
+        if off + 16 + incl > len(blob):
+            break
+        us = frac // 1000 if nanos else frac
+        out.append((off, ts * 1_000_000 + us, incl, orig,
+                    blob[off + 16:off + 16 + incl]))
+        off += 16 + incl
+    return out
+
+
+def _oracle_pcapng(blob: bytes) -> list[tuple]:
+    """The same for a whole pcapng capture, one struct unpack per block
+    header: SHB byte order, IDB if_tsresol, EPB and SPB."""
+    import struct
+
+    out, off, endian, ticks = [], 0, "<", []
+    while off + 12 <= len(blob):
+        if blob[off:off + 4] == b"\x0a\x0d\x0d\x0a":
+            endian = "<" if blob[off + 8:off + 12] == b"\x4d\x3c\x2b\x1a" \
+                else ">"
+            ticks = []
+        btype, blen = struct.unpack_from(endian + "II", blob, off)
+        body = blob[off + 8:off + blen - 4]
+        if btype == 1:  # IDB: options after linktype, reserved, snaplen
+            tick, opt = 1_000_000, 8
+            while opt + 4 <= len(body):
+                code, ln = struct.unpack_from(endian + "HH", body, opt)
+                if code == 0:
+                    break
+                if code == 9:
+                    v = body[opt + 4]
+                    tick = 2 ** (v & 0x7F) if v & 0x80 else 10 ** v
+                opt += 4 + (ln + 3) // 4 * 4
+            ticks.append(tick)
+        elif btype == 6:
+            if_id, hi, lo, incl, orig = struct.unpack_from(
+                endian + "IIIII", body)
+            tick = ticks[if_id] if if_id < len(ticks) else 1_000_000
+            out.append((off, ((hi << 32) | lo) * 1_000_000 // tick, incl,
+                        orig, body[20:20 + incl]))
+        elif btype == 3:
+            orig = struct.unpack_from(endian + "I", body)[0]
+            data = body[4:4 + orig]
+            out.append((off, 0, len(data), orig, data))
+        off += blen
+    return out
+
+
+def _framing_captures(tmp_path) -> tuple[list[str], list[str]]:
+    """Captures of the framing variants the synth files do not use, as
+    (splittable, whole-file only): nanosecond and big-endian classic;
+    pcapng with Simple Packet Blocks, with filler blocks, and with a
+    nanosecond interface, an interface id past the table and an EPB
+    whose caplen runs past its block; and a pcapng whose big-endian
+    second section a later slice cannot read (its preamble is the first
+    section's), so it is read whole only."""
+    import struct
+
+    frames = [(1_700_000_000 + i / 7, build_eth_ipv4_udp(
+        "10.0.0.1", "10.0.0.2", 1000 + i, 9, bytes([i]) * (i * 37 % 300)))
+        for i in range(40)]
+
+    def block(endian, btype, body):
+        pad = bytes(-len(body) % 4)
+        n = 12 + len(body) + len(pad)
+        return struct.pack(endian + "II", btype, n) + body + pad \
+            + struct.pack(endian + "I", n)
+
+    def section(endian):
+        """SHB, a nanosecond IDB and a 2**-10 s IDB, then the frames on
+        interfaces 0, 1 and 2 in turn (2 is past the table, so it counts
+        microseconds); frame 3 claims 50 bytes more than its block
+        holds."""
+        out = [block(endian, 0x0A0D0D0A,
+                     struct.pack(endian + "IHHq", 0x1A2B3C4D, 1, 0, -1))]
+        for tsresol in (9, 0x8A):
+            out.append(block(endian, 1, struct.pack(
+                endian + "HHIHHB3x", 1, 0, 65535, 9, 1, tsresol)
+                + bytes(4)))
+        for i, (ts, f) in enumerate(frames):
+            t = int(ts * (1e9, 1024, 1e6)[i % 3])
+            incl = len(f) + 50 if i == 3 else len(f)
+            out.append(block(endian, 6, struct.pack(
+                endian + "IIIII", i % 3, t >> 32, t & 0xFFFFFFFF, incl,
+                len(f)) + f))
+        return b"".join(out)
+
+    be = struct.pack(">IHHiIII", 0xA1B2C3D4, 2, 4, 0, 0, 65535, 1)
+    for ts, f in frames:
+        be += struct.pack(">IIII", int(ts), int(ts % 1 * 1e6), len(f),
+                          len(f) + 4) + f
+    blobs = {
+        "ns.pcap": build_pcap(frames, nanos=True),
+        "be.pcap": be,
+        "spb.pcapng": build_pcapng(frames, spb=True),
+        "filler.pcapng": build_pcapng(frames, mid_filler_bytes=70_000),
+        "ifaces.pcapng": section("<"),
+        "sections.pcapng": section("<") + section(">"),
+    }
+    paths = []
+    for name, blob in blobs.items():
+        (tmp_path / name).write_bytes(blob)
+        paths.append(str(tmp_path / name))
+    return paths[:-1], paths[-1:]
+
+
+def test_record_walk_matches_an_independent_reader(tmp_path, monkeypatch):
+    """open_record_batches against the one-unpack-per-record readers
+    above, per record (offset, epoch, incl, orig, bytes): every synth
+    capture and the edge capture of the vectorized differential, each
+    in classic and pcapng, plus the framing variants, read whole and as
+    the union of a 3-slice read."""
+    import wireduck_spark.sources.native as native
+    from tests.test_native_vec import _all_captures
+
+    def walked(path, start=None, end=None):
+        batches, _ = native.open_record_batches(path, start, end)
+        return [r for b in batches for r in zip(
+            b[0].tolist(), b[1].tolist(), b[2].tolist(), b[3].tolist(),
+            b[4])]
+
+    split, whole_only = _framing_captures(tmp_path)
+    caps = _all_captures(tmp_path, monkeypatch) + split + whole_only
+    assert sum(p.endswith(".pcapng") for p in caps) >= 10
+    for path in caps:
+        with open(path, "rb") as fh:
+            blob = fh.read()
+        want = (_oracle_pcapng if is_pcapng(path) else _oracle_classic)(blob)
+        assert want, path
+        assert walked(path) == want, os.path.basename(path)
+        if path in whole_only:
+            continue
+        parts = byte_range_partitions(path, 3)
+        assert [r for s, e in parts for r in walked(path, s, e)] == want, \
+            os.path.basename(path)

@@ -3,11 +3,13 @@
 native_vec.batch_columns must be BIT-IDENTICAL to the per-packet dict
 path (native.iter_packets + per-column appends) on every fixture
 capture, every schema, split reads, limits, and pcapng — the
-vectorized fast path covers plain Ethernet/IPv4/TCP + header-only UDP
-and everything else falls back to dissect_packet per row, so any
-drift between the two paths is a bug in the fast path's masks or
-merges. The reference implementation below is the pre-r15
-native_arrow_batches body, kept verbatim as the differential oracle.
+vectorized path covers Ethernet with one 802.1Q tag, IPv4 and IPv6
+TCP/UDP, ARP and ICMPv4, and the rows it leaves to dissect_packet
+(decap ports, IPv6 extension headers, QinQ, other IP protocols) run
+it per row, so any drift between the two paths is a bug in the
+vectorized masks or merges. The reference implementation below is the
+pre-r15 native_arrow_batches body, kept verbatim as the differential
+oracle.
 """
 
 from __future__ import annotations
@@ -283,25 +285,60 @@ def test_prescreen_rejects_only_rows_no_probe_claims():
 _ETH = bytes(6) + bytes([2, 0, 0, 0, 0, 1]) + b"\x08\x00"
 
 
-def _ip4(src: str, dst: str, proto: int, l4: bytes, ip_len: int) -> bytes:
-    return _ETH + struct.pack(
+def _l2(ethertype: int, tags=()) -> bytes:
+    """An Ethernet header with one 802.1Q header per TCI in ``tags``."""
+    return _ETH[:12] + b"".join(struct.pack(">HH", 0x8100, tci)
+                                for tci in tags) \
+        + struct.pack(">H", ethertype)
+
+
+def _ip4(src: str, dst: str, proto: int, l4: bytes, ip_len: int,
+         tags=()) -> bytes:
+    return _l2(0x0800, tags) + struct.pack(
         ">BBHHHBBH4s4s", 0x45, 0, ip_len, 1, 0, 64, proto, 0,
         socket.inet_aton(src), socket.inet_aton(dst)) + l4
 
 
-def _tcp(src, dst, sport, dport, payload, options=b"", flags=0x18,
-         data_off=None):
-    hdr = 20 + len(options)
-    doff = hdr if data_off is None else data_off
-    l4 = struct.pack(">HHIIBBHHH", sport, dport, 7, 9, (doff // 4) << 4,
-                     flags, 8192, 0, 0) + options + payload
-    return _ip4(src, dst, 6, l4, 20 + len(l4))
+def _ip6(src: str, dst: str, next_hdr: int, l4: bytes, tags=(),
+         plen=None) -> bytes:
+    return _l2(0x86DD, tags) + struct.pack(
+        ">IHBB16s16s", 6 << 28, len(l4) if plen is None else plen,
+        next_hdr, 64, socket.inet_pton(socket.AF_INET6, src),
+        socket.inet_pton(socket.AF_INET6, dst)) + l4
 
 
-def _udp(src, dst, sport, dport, payload, length=None):
+def _tcp_l4(sport, dport, payload, options=b"", flags=0x18, data_off=None):
+    doff = 20 + len(options) if data_off is None else data_off
+    return struct.pack(">HHIIBBHHH", sport, dport, 7, 9, (doff // 4) << 4,
+                       flags, 8192, 0, 0) + options + payload
+
+
+def _udp_l4(sport, dport, payload, length=None):
     ulen = 8 + len(payload) if length is None else length
-    l4 = struct.pack(">HHHH", sport, dport, ulen, 0) + payload
-    return _ip4(src, dst, 17, l4, 20 + len(l4))
+    return struct.pack(">HHHH", sport, dport, ulen, 0) + payload
+
+
+def _tcp(src, dst, sport, dport, payload, options=b"", flags=0x18,
+         data_off=None, tags=()):
+    l4 = _tcp_l4(sport, dport, payload, options, flags, data_off)
+    return _ip4(src, dst, 6, l4, 20 + len(l4), tags)
+
+
+def _udp(src, dst, sport, dport, payload, length=None, tags=()):
+    l4 = _udp_l4(sport, dport, payload, length)
+    return _ip4(src, dst, 17, l4, 20 + len(l4), tags)
+
+
+def _icmp(src, dst, icmp_type, rest: bytes, tags=()):
+    l4 = struct.pack(">BBH", icmp_type, 0, 0xBEEF) + rest
+    return _ip4(src, dst, 1, l4, 20 + len(l4), tags)
+
+
+def _arp(opcode, sip, tip, hlen=6, plen=4, tags=()):
+    return _l2(0x0806, tags) + struct.pack(
+        ">HHBBH", 1, 0x0800, hlen, plen, opcode) \
+        + bytes([2, 0, 0, 0, 0, 9]) + socket.inet_aton(sip) \
+        + bytes(6) + socket.inet_aton(tip)
 
 
 def _edge_frames() -> list[bytes]:
@@ -359,11 +396,76 @@ def _edge_frames() -> list[bytes]:
         + bytes(6),
         _udp("10.0.3.1", "10.0.3.2", 50001, 50002, b"hi") + bytes(16),
     ]
+    # 802.1Q: IPv4 TCP with an L7 label and with options, UDP, ARP,
+    # ICMP, an unknown inner ethertype, a short inner IPv4 header and a
+    # tagged frame too short for its tag
+    frames += [
+        _tcp("10.0.4.1", "10.0.4.2", 40003, 80, http, tags=(0x2064,)),
+        _tcp("10.0.4.1", "10.0.4.2", 40003, 5001, b"x", opts,
+             tags=(0xE005,)),
+        _udp("10.0.4.1", "10.0.4.2", 5000, 53,
+             dns_query_payload("vlan.example"), tags=(7,)),
+        _udp("10.0.4.2", "10.0.4.1", 6000, 7000, b"bulk" * 8, tags=(7,)),
+        _arp(1, "10.0.4.1", "10.0.4.254", tags=(7,)),
+        _icmp("10.0.4.1", "10.0.4.2", 8, b"\x00\x07\x00\x01", tags=(7,)),
+        _l2(0x88B5, (7,)) + b"opaque",
+        _l2(0x0800, (7,)) + bytes(12),
+        _l2(0x0800, (7,))[:16],
+    ]
+    # IPv6: TCP with an L7 label, with options, with a payload length
+    # under the segment and cut short; UDP with and without an L7
+    # label; the same host on both ends; VLAN+IPv6; a truncated IPv6
+    # header; an extension header, ICMPv6 and a no-next-header packet
+    v6a, v6b = "2001:db8::1", "2001:db8:0:1::a"
+    frames += [
+        _ip6(v6a, v6b, 6, _tcp_l4(40010, 443, hello)),
+        _ip6(v6b, v6a, 6, _tcp_l4(443, 40010, b"", flags=0x10)),
+        _ip6(v6a, v6b, 6, _tcp_l4(40011, 5001, b"opaque", opts)),
+        _ip6(v6a, v6b, 6, _tcp_l4(40012, 5001, b"abcdef"), plen=22),
+        _ip6(v6a, v6b, 6, _tcp_l4(40013, 5001, b"")[:12]),
+        _ip6(v6a, "fe80::2", 17, _udp_l4(5000, 53,
+                                        dns_query_payload("v6.example"))),
+        _ip6("fe80::2", v6a, 17, _udp_l4(7000, 7001, b"v6 bulk")),
+        _ip6(v6a, v6a, 17, _udp_l4(7001, 7000, b"same host")),
+        _ip6(v6a, v6b, 6, _tcp_l4(40014, 80, http), tags=(0x0005,)),
+        _ip6(v6a, v6b, 17, _udp_l4(7000, 7001, b"tagged"), tags=(5,)),
+        _ip6(v6a, v6b, 6, _tcp_l4(40015, 80, b""))[:14 + 30],
+        _ip6(v6a, v6b, 6, b"", tags=(5,))[:18 + 39],
+        _ip6(v6a, v6b, 0, bytes([6, 0]) + bytes(6)
+             + _tcp_l4(40016, 5001, b"behind hop-by-hop")),
+        _ip6(v6a, v6b, 58, bytes([128, 0, 0, 0, 0, 1, 0, 1])),
+        _ip6(v6a, v6b, 59, b"nothing"),
+    ]
+    # QinQ: a second 802.1Q tag inside the first
+    frames += [
+        _tcp("10.0.5.1", "10.0.5.2", 40020, 80, http, tags=(0x0064, 0x0005)),
+        _l2(0x0806, (1, 2)) + bytes(28),
+    ]
+    # ARP: request, reply, another opcode, a non-IPv4 ARP and one cut
+    # short of its addresses
+    frames += [
+        _arp(1, "10.0.6.1", "10.0.6.254"),
+        _arp(2, "10.0.6.254", "10.0.6.1"),
+        _arp(3, "10.0.6.1", "10.0.6.2"),
+        _arp(1, "10.0.6.1", "10.0.6.2", plen=16),
+        _arp(1, "10.0.6.1", "10.0.6.2")[:14 + 20],
+    ]
+    # ICMPv4: echo request and reply, the other named types, an unnamed
+    # one, an echo without room for its identifier and a cut header
+    frames += [
+        _icmp("10.0.7.1", "10.0.7.2", 8, b"\x12\x34\x00\x01ping"),
+        _icmp("10.0.7.2", "10.0.7.1", 0, b"\x12\x34\x00\x01ping"),
+        _icmp("10.0.7.1", "10.0.7.2", 3, bytes(4)),
+        _icmp("10.0.7.1", "10.0.7.2", 11, bytes(4)),
+        _icmp("10.0.7.1", "10.0.7.2", 13, bytes(4)),
+        _icmp("10.0.7.1", "10.0.7.2", 8, b"\x12\x34"),
+        _icmp("10.0.7.1", "10.0.7.2", 8, b"")[:14 + 20 + 3],
+    ]
     return frames
 
 
 def _edge_capture(tmp_path) -> list[str]:
-    """The rows the columnar TCP/UDP tail must get exactly right, as a
+    """The rows the columnar dissector must get exactly right, as a
     classic capture and its pcapng twin."""
     frames = [(1_700_000_000.0 + i / 8, f)
               for i, f in enumerate(_edge_frames())]

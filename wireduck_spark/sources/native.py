@@ -23,7 +23,9 @@ import os
 import struct
 from dataclasses import dataclass
 from datetime import datetime, timedelta
-from functools import lru_cache
+from functools import lru_cache, partial
+
+import numpy as np
 
 from wireduck_spark.sources.fs import filesystem_for
 
@@ -273,6 +275,11 @@ _TCP_FIXED = struct.Struct(">HHIIBBHH")   # sport dport seq ack off/res flags wi
 _IPV4_FIXED = struct.Struct(">BBHHHBBH4s4s")  # ver/ihl tos len id frag ttl proto cksum src dst
 
 
+# IPv6 next-header values the dissector walks as extension headers:
+# hop-by-hop, routing, fragment, destination options
+_IPV6_EXT_HEADERS = (0, 43, 44, 60)
+
+
 def dissect_packet(data: bytes, linktype: int, fields: dict) -> None:
     """Dissect one captured frame (Ethernet linktype) into `fields`."""
     protos = ["eth"]
@@ -312,7 +319,7 @@ def dissect_packet(data: bytes, linktype: int, fields: dict) -> None:
         l4_off = off + 40
         hdr_guard = 0
         non_first_fragment = False
-        while next_header in (0, 43, 44, 60) and hdr_guard < 8:
+        while next_header in _IPV6_EXT_HEADERS and hdr_guard < 8:
             if len(data) < l4_off + 8:
                 break
             nh = data[l4_off]
@@ -692,6 +699,11 @@ def _udp_payload_chain(data: bytes, off: int, payload: bytes,
 
 
 
+# ICMP info-column text by type; other types read "Type N"
+_ICMP_KINDS = {0: "Echo (ping) reply", 3: "Destination unreachable",
+               8: "Echo (ping) request", 11: "Time-to-live exceeded"}
+
+
 def _dissect_l4(
     data: bytes, off: int, proto: int, l3_payload_len: int,
     protos: list, fields: dict,
@@ -753,10 +765,8 @@ def _dissect_l4(
             fields["icmp.ident"], fields["icmp.seq"] = struct.unpack(
                 ">HH", data[off + 4:off + 8]
             )
-        kind = {0: "Echo (ping) reply", 3: "Destination unreachable",
-                8: "Echo (ping) request", 11: "Time-to-live exceeded"}.get(
-                    data[off], f"Type {data[off]}")
-        fields["_ws.col.info"] = kind
+        fields["_ws.col.info"] = _ICMP_KINDS.get(data[off],
+                                                 f"Type {data[off]}")
     elif proto == 58 and len(data) >= off + 4:  # ICMPv6
         protos.append("icmpv6")
         fields["icmpv6.type"] = data[off]
@@ -2475,13 +2485,71 @@ def _unsplit(start_byte):
     return None, None
 
 
-def _refill(fh, buf: bytes, lo: int, pos: int, need: int,
-            raw: list) -> bytes:
-    """The walk buffer after a refill: buf[pos:] plus one read of at
-    least max(_CHUNK, need) bytes. The walked bytes buf[lo:pos] go to
-    `raw` as a view, which the next batch carries out (see _walk)."""
+def _refill(fh, buf: bytes, base: int, lo: int, pos: int, offs: list,
+            need: int, raw: list) -> tuple[bytes, int, int]:
+    """(buffer, base, pos) after a refill, ``base`` being the file offset
+    of the buffer's first byte: the buffer is buf[keep:] plus one read of
+    at least max(_CHUNK, need) bytes, where keep is the start of the
+    first record of the batch being collected (``offs[0]``, a file
+    offset) or ``pos`` when there is none, so a batch's records always
+    sit in one buffer. The walked bytes buf[lo:pos] go to `raw` as a
+    view, which the next batch carries out (see _walk)."""
     raw.append(memoryview(buf)[lo:pos])
-    return buf[pos:] + fh.read(max(_CHUNK, need))
+    keep = offs[0] - base if offs else pos
+    buf = b"".join((memoryview(buf)[keep:], fh.read(max(_CHUNK, need))))
+    return buf, base + keep, pos - keep
+
+
+class RecordBytes:
+    """The captured bytes of a batch's records, sliced on demand: record
+    i is ``buf[start[i]:start[i] + length[i]]``, where ``buf`` is the
+    walk buffer the records sit in and ``start``/``length`` are int64
+    arrays. An int index gives that record's bytes, a slice a view of
+    those records, and iteration every record's bytes in order."""
+
+    __slots__ = ("buf", "start", "length")
+
+    def __init__(self, buf: bytes, start: np.ndarray, length: np.ndarray):
+        self.buf = buf
+        self.start = start
+        self.length = length
+
+    def __len__(self) -> int:
+        return len(self.start)
+
+    def __getitem__(self, i):
+        if isinstance(i, slice):
+            return RecordBytes(self.buf, self.start[i], self.length[i])
+        s = int(self.start[i])
+        return self.buf[s:s + int(self.length[i])]
+
+    def __iter__(self):
+        buf = self.buf
+        for s, n in zip(self.start.tolist(), self.length.tolist()):
+            yield buf[s:s + n]
+
+
+def _gather_u32(a: np.ndarray, at: np.ndarray, words: int,
+                u32: np.dtype) -> np.ndarray:
+    """The ``words`` consecutive u32 fields at each offset ``at`` of the
+    byte array ``a``, as a (words, rows) int64 array."""
+    b = a[at[:, None] + np.arange(4 * words)]
+    return b.view(u32).astype(np.int64).T.copy()
+
+
+def _classic_batch(buf: bytes, offs: list, base: int, u32: np.dtype,
+                   div: int, linktype: int) -> tuple:
+    """The column batch of classic records whose headers start at the
+    file offsets ``offs``; buf[0] is file offset ``base``."""
+    offs = np.array(offs, np.int64)
+    s = offs - base
+    ts, frac, incl, orig = _gather_u32(np.frombuffer(buf, np.uint8), s, 4,
+                                       u32)
+    # integer microseconds (no float round-trip: ns captures keep exact
+    # us truncation, and 2038+ second counts stay exact)
+    epoch = ts * 1_000_000 + frac // div
+    return (offs, epoch, incl, orig,
+            RecordBytes(buf, s + RECORD_HEADER_LEN, incl), linktype)
 
 
 def _walk_classic(fh, size: int, start_byte, end_byte, batch_rows: int):
@@ -2490,51 +2558,49 @@ def _walk_classic(fh, size: int, start_byte, end_byte, batch_rows: int):
     info = read_global_header(head)
     if not splittable_snaplen(info):
         start_byte, end_byte = _unsplit(start_byte)
-    off = GLOBAL_HEADER_LEN
+    base = GLOBAL_HEADER_LEN  # the file offset of buf[0]
     if start_byte is not None:
-        off = resync_offset(fh, info, start_byte, size)
-        fh.seek(off)
+        base = resync_offset(fh, info, start_byte, size)
+        fh.seek(base)
     end = size if end_byte is None else end_byte
-    unpack_from = struct.Struct(info.endian + "IIII").unpack_from
-    div = info.ts_divisor // 1_000_000
-    lt = info.linktype
+    incl_at = struct.Struct(info.endian + "I").unpack_from
+    layout = (np.dtype(info.endian + "u4"), info.ts_divisor // 1_000_000,
+              info.linktype)
     cap = _MAX_SANE_ORIGLEN
+    hl = RECORD_HEADER_LEN
     buf = b""
-    pos = lo = 0
+    pos = lo = have = 0
+    stop, limit = end - base, size - base
     raw: list = [head]
-    offs, epochs, incls, origs, datas = [], [], [], [], []
-    while off < end:
-        if pos + RECORD_HEADER_LEN > len(buf):
-            buf = _refill(fh, buf, lo, pos, 0, raw)
-            pos = lo = 0
-            if len(buf) < RECORD_HEADER_LEN:
+    offs: list = []
+    while pos < stop:
+        if pos + hl > have:
+            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, 0, raw)
+            lo, have = pos, len(buf)
+            stop, limit = end - base, size - base
+            if pos + hl > have:
                 break
-        ts, frac, incl, orig = unpack_from(buf, pos)
-        if incl > cap or off + RECORD_HEADER_LEN + incl > size:
+        incl = incl_at(buf, pos + 8)[0]
+        nxt = pos + hl + incl
+        if incl > cap or nxt > limit:
             break
-        nxt = pos + RECORD_HEADER_LEN + incl
-        if nxt > len(buf):
-            buf = _refill(fh, buf, lo, pos, nxt - pos, raw)
-            pos = lo = 0
-            nxt = RECORD_HEADER_LEN + incl
-            if len(buf) < nxt:
+        if nxt > have:
+            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, hl + incl,
+                                     raw)
+            lo, have = pos, len(buf)
+            stop, limit = end - base, size - base
+            nxt = pos + hl + incl
+            if nxt > have:
                 break
-        offs.append(off)
-        # integer microseconds (no float round-trip: ns captures keep
-        # exact us truncation, and 2038+ second counts stay exact)
-        epochs.append(ts * 1_000_000 + frac // div)
-        incls.append(incl)
-        origs.append(orig)
-        datas.append(buf[pos + RECORD_HEADER_LEN:nxt])
-        off += nxt - pos
+        offs.append(base + pos)
         pos = nxt
         if len(offs) >= batch_rows:
             raw.append(memoryview(buf)[lo:pos])
             lo = pos
-            yield (offs, epochs, incls, origs, datas, lt), raw
-            offs, epochs, incls, origs, datas, raw = [], [], [], [], [], []
+            yield offs, partial(_classic_batch, buf, offs, base, *layout), raw
+            offs, raw = [], []
     raw.append(memoryview(buf)[lo:pos])
-    yield (offs, epochs, incls, origs, datas, lt), raw
+    yield offs, partial(_classic_batch, buf, offs, base, *layout), raw
 
 
 _SHB_TYPE = 0x0A0D0D0A
@@ -2644,11 +2710,63 @@ def _find_all(buf: bytes, marker: bytes):
         rel = buf.find(marker, rel + 1)
 
 
-_PCAPNG_STRUCTS = {
-    e: (struct.Struct(e + "II").unpack_from,
-        struct.Struct(e + "IIIII").unpack_from)
-    for e in "<>"
-}
+_PCAPNG_HDR = {e: struct.Struct(e + "II").unpack_from for e in "<>"}
+# pcapng timestamps convert to microseconds in int64 for interface
+# resolutions up to this many ticks per second, with Python ints above
+_MAX_VEC_TICKS = 10 ** 12
+
+
+def _epoch_us(hi: np.ndarray, lo: np.ndarray, k: np.ndarray,
+              ticks: list) -> np.ndarray:
+    """floor(((hi << 32) | lo) * 10**6 / ticks[k]) per row: in int64 as
+    q * 10**6 + r * 10**6 // ticks when every term fits, else with
+    Python ints, where a value past int64 raises OverflowError."""
+    if hi.max() < 1 << 31 and max(
+            ticks[i] for i in np.unique(k).tolist()) <= _MAX_VEC_TICKS:
+        per = np.array([min(t, _MAX_VEC_TICKS) for t in ticks], np.int64)[k]
+        q, r = np.divmod((hi << 32) | lo, per)
+        if q.max() < (1 << 63) // 1_000_000 - 1:
+            return q * 1_000_000 + r * 1_000_000 // per
+    return np.array([((h << 32) | x) * 1_000_000 // ticks[i]
+                     for h, x, i in zip(hi.tolist(), lo.tolist(),
+                                        k.tolist())], np.int64)
+
+
+def _pcapng_batch(buf: bytes, offs: list, base: int, endian: str,
+                  interfaces: tuple) -> tuple:
+    """The column batch of the EPB and SPB blocks that start at the file
+    offsets ``offs`` (buf[0] is file offset ``base``), all in one
+    section of byte order ``endian`` under the interface table
+    ``interfaces``: (linktype, ticks per second) by interface id."""
+    offs = np.array(offs, np.int64)
+    s = offs - base
+    a = np.frombuffer(buf, np.uint8)
+    u32 = np.dtype(endian + "u4")
+    btype, blen, word = _gather_u32(a, s, 3, u32)
+    # SPB: original length, then the packet, cut to the block
+    spb = btype == _SPB_TYPE
+    orig = word
+    incl = np.minimum(word, blen - 16)
+    start = s + 12
+    length = incl.copy()
+    lt = np.full(len(s), interfaces[0][0] if interfaces else 1, np.int64)
+    epoch = np.zeros(len(s), np.int64)
+    if not spb.all():
+        # EPB: interface, ts hi/lo, caplen, origlen, then the packet; an
+        # interface id past the table reads as (linktype 1, 10**6 ticks)
+        epb = ~spb
+        if_id, hi, lo, e_incl, e_orig = _gather_u32(a, s[epb] + 8, 5, u32)
+        table = (*interfaces, (1, 1_000_000))
+        k = np.minimum(if_id, len(interfaces))
+        lt[epb] = np.array([x for x, _ in table], np.int64)[k]
+        epoch[epb] = _epoch_us(hi, lo, k, [t for _, t in table])
+        incl[epb] = e_incl
+        orig[epb] = e_orig
+        start[epb] += 16
+        length[epb] = np.minimum(e_incl, blen[epb] - 32)
+    if len(lt) and (lt == lt[0]).all():
+        lt = int(lt[0])
+    return offs, epoch, incl, orig, RecordBytes(buf, start, length), lt
 
 
 def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
@@ -2671,31 +2789,41 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
     that large at a slice boundary fails every resync chain and no slice
     owns it), so such a capture reads unsplit (:func:`_unsplit`).
     snaplen 0 (unset/unlimited) stays splittable under the sanity cap —
-    the same documented residual as classic's snaplen-0 rule."""
+    the same documented residual as classic's snaplen-0 rule.
+
+    A batch holds the packet blocks of one section under one interface
+    table: an SHB or IDB, or a skipped giant block, ends the batch
+    collected so far."""
     cap = _MAX_SANE_ORIGLEN
     endian = "<"
-    hdr, epb = _PCAPNG_STRUCTS[endian]
+    hdr = _PCAPNG_HDR[endian]
     interfaces: list[tuple[int, int]] = []
     splittable = in_head = True
     buf = b""
-    off = pos = lo = 0
-    end = size
+    base = pos = lo = have = 0  # base: the file offset of buf[0]
+    end = stop = limit = size
     raw: list = []
-    offs, epochs, incls, origs, datas, lts = [], [], [], [], [], []
-    while off < end and off + 12 <= size:
-        if pos + 12 > len(buf):
-            buf = _refill(fh, buf, lo, pos, 0, raw)
-            pos = lo = 0
-            if len(buf) < 12:
+    offs: list = []
+    while pos < stop and pos + 12 <= limit:
+        if pos + 12 > have:
+            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, 0, raw)
+            lo, have = pos, len(buf)
+            stop, limit = end - base, size - base
+            if pos + 12 > have:
                 break
         btype, blen = hdr(buf, pos)
         if btype == _SHB_TYPE:  # section restart (the type is palindromic)
+            if offs:
+                yield _pcapng_cut(buf, base, lo, pos, offs, endian,
+                                  interfaces, raw)
+                offs, raw, lo = [], [], pos
             endian = "<" if buf[pos + 8:pos + 12] == b"\x4d\x3c\x2b\x1a" \
                 else ">"
-            hdr, epb = _PCAPNG_STRUCTS[endian]
+            hdr = _PCAPNG_HDR[endian]
             interfaces = []
             btype, blen = hdr(buf, pos)
-        if blen < 12 or off + blen > size:
+        nxt = pos + blen
+        if blen < 12 or nxt > limit:
             break
         if in_head and btype in (_EPB_TYPE, _SPB_TYPE):
             in_head = False
@@ -2703,12 +2831,14 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
                 start_byte, end_byte = _unsplit(start_byte)
             if end_byte is not None:
                 end = end_byte
-            if start_byte is not None and start_byte > off:
-                off = pcapng_resync_offset(fh, endian, start_byte, size)
+                stop = end - base
+            if start_byte is not None and start_byte > base + pos:
                 raw.append(memoryview(buf)[lo:pos])
-                fh.seek(off)
+                base = pcapng_resync_offset(fh, endian, start_byte, size)
+                fh.seek(base)
                 buf = b""
-                pos = lo = 0
+                pos = lo = have = 0
+                stop, limit = end - base, size - base
             continue
         if blen > cap:
             # A giant blen must not become one near-file-sized read (r12
@@ -2718,72 +2848,72 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
             # giant) block: skip it uncopied. Split reads stop — the
             # slice that owns the next block resyncs past this one.
             if start_byte is None:
-                fh.seek(off + blen - 4)
+                fh.seek(base + nxt - 4)
                 if fh.read(4) == struct.pack(endian + "I", blen):
-                    raw.append(memoryview(buf)[lo:pos])
-                    off += blen
-                    fh.seek(off)
+                    yield _pcapng_cut(buf, base, lo, pos, offs, endian,
+                                      interfaces, raw)
+                    offs, raw = [], []
+                    base += nxt
+                    fh.seek(base)
                     buf = b""
-                    pos = lo = 0
+                    pos = lo = have = 0
+                    stop, limit = end - base, size - base
                     continue
             break
-        nxt = pos + blen
-        if nxt > len(buf):
-            buf = _refill(fh, buf, lo, pos, blen, raw)
-            pos = lo = 0
-            nxt = blen
-            if len(buf) < nxt:
+        if nxt > have:
+            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, blen, raw)
+            lo, have = pos, len(buf)
+            stop, limit = end - base, size - base
+            nxt = pos + blen
+            if nxt > have:
                 break
-        if btype == _EPB_TYPE and blen >= 32:
-            if_id, ts_hi, ts_lo, incl, orig = epb(buf, pos + 8)
-            lt, ticks = (interfaces[if_id] if if_id < len(interfaces)
-                         else (1, 1_000_000))
-            offs.append(off)
-            epochs.append(((ts_hi << 32) | ts_lo) * 1_000_000 // ticks)
-            incls.append(incl)
-            origs.append(orig)
-            datas.append(buf[pos + 28:min(pos + 28 + incl, nxt - 4)])
-            lts.append(lt)
-        elif btype == _SPB_TYPE and blen >= 16:
-            orig = struct.unpack_from(endian + "I", buf, pos + 8)[0]
-            incl = min(orig, blen - 16)
-            offs.append(off)
-            epochs.append(0)
-            incls.append(incl)
-            origs.append(orig)
-            datas.append(buf[pos + 12:pos + 12 + incl])
-            lts.append(interfaces[0][0] if interfaces else 1)
+        if btype == _EPB_TYPE and blen >= 32 \
+                or btype == _SPB_TYPE and blen >= 16:
+            offs.append(base + pos)
         elif btype == _IDB_TYPE and blen >= 20:
+            if offs:
+                yield _pcapng_cut(buf, base, lo, pos, offs, endian,
+                                  interfaces, raw)
+                offs, raw, lo = [], [], pos
             body = buf[pos + 8:nxt - 4]
             linktype, _, snaplen = struct.unpack_from(endian + "HHI", body)
             # 128 B of EPB framing/options headroom over the snaplen
             if snaplen + 128 > _MAX_SANE_BLOCK and snaplen != 0:
                 splittable = False
             interfaces.append((linktype, _idb_tsresol(body, endian)))
-        off += blen
         pos = nxt
         if len(offs) >= batch_rows:
-            raw.append(memoryview(buf)[lo:pos])
-            lo = pos
-            lt = lts[0] if len(set(lts)) == 1 else lts
-            yield (offs, epochs, incls, origs, datas, lt), raw
-            offs, epochs, incls, origs, datas, lts = [], [], [], [], [], []
-            raw = []
+            yield _pcapng_cut(buf, base, lo, pos, offs, endian, interfaces,
+                              raw)
+            offs, raw, lo = [], [], pos
+    yield _pcapng_cut(buf, base, lo, pos, offs, endian, interfaces, raw)
+
+
+def _pcapng_cut(buf: bytes, base: int, lo: int, pos: int, offs: list,
+                endian: str, interfaces: list, raw: list) -> tuple:
+    """The (offsets, columns, raw) triple :func:`_walk_pcapng` yields at
+    buf[pos], buf[0] being file offset ``base``: the walked bytes
+    buf[lo:pos] join ``raw``."""
     raw.append(memoryview(buf)[lo:pos])
-    lt = lts[0] if len(set(lts)) == 1 else lts
-    yield (offs, epochs, incls, origs, datas, lt), raw
+    return offs, partial(_pcapng_batch, buf, offs, base, endian,
+                         tuple(interfaces)), raw
 
 
 def _walk(fh, size: int, start_byte, end_byte, batch_rows: int = 4096):
     """Walk one byte-range slice of a capture, classic or pcapng (sniffed
-    from the first 4 bytes), in 4 MiB chunks. Yields (batch, raw) pairs:
-    ``batch`` holds the columns (offsets, epoch_us, incl, orig, data,
-    linktype) of up to batch_rows packet records the slice owns —
-    linktype is an int when uniform over the batch, else a per-record
-    list — and ``raw`` the file bytes walked since the previous pair,
-    verbatim: the head (classic global header or pcapng preamble)
-    first, then every record or block the slice owns. The last pair may
-    hold no rows.
+    from the first 4 bytes), in 4 MiB chunks. Yields (offsets, columns,
+    raw) triples: ``offsets`` lists the file offsets of up to
+    batch_rows packet records the slice owns, ``columns()`` builds
+    their column batch (see :func:`open_record_batches`) and ``raw``
+    holds the file bytes walked since the previous triple, verbatim:
+    the head (classic global header or pcapng preamble) first, then
+    every record or block the slice owns. The last triple may hold no
+    rows.
+
+    The per-record loop only reads each record's length to find the
+    next one and notes the record's offset; a batch's records always
+    sit in one walk buffer (a refill carries the batch collected so
+    far), from which ``columns()`` gathers the header fields with NumPy.
 
     start_byte/end_byte None read the whole file. Ownership is the
     byte_range_partitions contract: a record or block belongs to the
@@ -2831,9 +2961,9 @@ def extract_slice(path: str, start_byte, end_byte,
     fs = filesystem_for(path)
     offsets: list[int] = []
     with fs.open(path) as fh, open(out_path, "wb") as out:
-        for batch, raw in _walk(fh, fs.size(path), start_byte, end_byte):
+        for offs, _, raw in _walk(fh, fs.size(path), start_byte, end_byte):
             out.writelines(raw)
-            offsets += batch[0]
+            offsets += offs
     return offsets
 
 
@@ -2843,10 +2973,14 @@ def open_record_batches(path: str, start_byte: int | None = None,
                         batch_rows: int = 4096):
     """(iterator of columnar record batches, split flag) for a capture
     slice — the record walk under the vectorized Arrow path and
-    iter_packets. Each batch holds the (offsets, epoch_us, incl, orig,
-    data, linktype) columns of :func:`_walk`; `split` tells the consumer
-    whether frame.number is the byte offset (sliced read) or the 1-based
-    ordinal (whole-file read) — the rule iter_packets documents."""
+    iter_packets. A batch is the tuple (offsets, epoch_us, incl, orig,
+    data, linktype) of up to batch_rows records: the first four are
+    int64 arrays, ``data`` a :class:`RecordBytes` over the walk buffer
+    (each record's captured bytes, sliced on demand) and linktype an
+    int when uniform over the batch, else an int64 array. `split` tells
+    the consumer whether frame.number is the byte offset (sliced read)
+    or the 1-based ordinal (whole-file read) — the rule iter_packets
+    documents."""
     fs = filesystem_for(path)
     if size is None:
         size = fs.size(path)
@@ -2864,10 +2998,10 @@ def open_record_batches(path: str, start_byte: int | None = None,
 
     def gen():
         try:
-            for batch, _ in _walk(fh, size, start_byte, end_byte,
-                                  batch_rows):
-                if batch[0]:
-                    yield batch
+            for offs, columns, _ in _walk(fh, size, start_byte, end_byte,
+                                          batch_rows):
+                if offs:
+                    yield columns()
         finally:
             fh.close()
 
@@ -2920,9 +3054,10 @@ def iter_packets(
                                          size=size)
     frame_no = 1
     for offs, epochs, incls, origs, datas, lt in batches:
-        lts = [lt] * len(offs) if isinstance(lt, int) else lt
+        lts = [lt] * len(offs) if isinstance(lt, int) else lt.tolist()
         for off, epoch_us, incl, orig, data, linktype in zip(
-                offs, epochs, incls, origs, datas, lts):
+                offs.tolist(), epochs.tolist(), incls.tolist(),
+                origs.tolist(), datas, lts):
             fields: dict = {
                 "frame.number": off if split else frame_no,
                 "frame.time_epoch": epoch_us if raw_ts else (

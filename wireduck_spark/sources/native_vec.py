@@ -1,14 +1,17 @@
 """Vectorized (columnar) batch dissector for the native pcap engine.
 
-r15 optimization (guide §4.2 "do the heavy lifting in native code"):
-the per-packet dict path (native.iter_packets -> dict -> per-column
+The per-packet dict path (native.dissect_packet -> dict -> per-column
 appends) spends most of its time building and re-reading ~20-field
-Python dicts per packet. This module parses the fixed L2/L3/L4 headers
-for a whole record batch at once with NumPy gathers over one
-concatenated byte buffer and emits pyarrow-ready columns directly. The
-generic TCP/UDP tail is columnar too: addresses, info lines, flow ids
-(one md5 per distinct 4-tuple) and the payload hex (one Arrow string
-array per batch). Per-packet Python runs only on these rows:
+Python dicts per packet. This module parses the fixed headers of a
+whole record batch at once with NumPy gathers over the walk buffer the
+records sit in (native.RecordBytes) and emits pyarrow-ready columns
+directly: Ethernet II with one 802.1Q tag, IPv4, the fixed 40-byte
+IPv6 header, ARP's fixed fields, ICMPv4 type and code, and the TCP and
+UDP headers. The TCP/UDP tail is columnar too, over IPv4 and IPv6 and
+with or without a VLAN tag: addresses, info lines, flow ids (one md5
+per distinct 4-tuple; IPv6 text from native._ipv6, once per distinct
+address) and the payload hex (one Arrow string array per batch).
+Per-packet Python runs only on these rows:
 
 - TCP candidate rows: rows with options (data_off > 20, which
   native._tcp_options walks), and payload rows the prescreen
@@ -17,14 +20,18 @@ array per batch). Per-packet Python runs only on these rows:
 - UDP candidate rows: payload rows the prescreen (``_udp_candidates``)
   cannot rule out for native._udp_payload_chain, which runs on a fresh
   per-row dict,
-- everything off the proven fast path (VLAN, IPv6, ARP, non-TCP/UDP IP
-  protocols, other linktypes, and the UDP payload rows that could hit
-  the VXLAN (dport 4789) or GTP (port 2152) decap branches, which
-  rewrite other layers' columns): the row falls back to
-  native.dissect_packet and overwrites its cells, so the output is
-  bit-identical to the dict path BY CONSTRUCTION for every row class
-  (pinned by tests/test_native_vec.py's full differential over every
-  fixture capture).
+- the full-row fallback: UDP payload rows that could hit the VXLAN
+  (dport 4789) or GTP (port 2152) decap branches, which rewrite other
+  layers' columns; IPv6 rows with an extension-header chain; QinQ
+  (a second 802.1Q tag); and the IP protocols of
+  ``_L4_FALLBACK_PROTOS``. Such a row runs native.dissect_packet and
+  overwrites its cells, so it is bit-identical to the dict path BY
+  CONSTRUCTION.
+
+Every other row class is pinned bit-identical to the dict path by
+tests/test_native_vec.py's full differential over every fixture
+capture and its edge rows. Non-Ethernet link types and frames shorter
+than an Ethernet header carry only the frame columns ("raw" / "eth").
 
 The prescreen reads each payload's first bytes and its ports. It is an
 exact superset: a row it rejects is one where the chain would return no
@@ -39,10 +46,6 @@ because no other _udp_payload_chain branch reads an earlier layer's
 fields: the chain sees a fresh dict there, not the row's dissected
 L2-L4 fields. A new branch that reads or rewrites another layer's
 fields must add its ports to ``udp_fb`` in batch_columns.
-
-The fast path intentionally covers exactly the traffic that dominates
-big captures (plain Ethernet II / IPv4 / TCP and UDP); a capture full
-of exotic rows degrades gracefully to dict-path speed.
 """
 
 from __future__ import annotations
@@ -57,9 +60,12 @@ import pyarrow.compute as pc
 from wireduck_spark.sources.native import (
     _HTTP2_PREFACE,
     _HTTP_METHODS,
+    _ICMP_KINDS,
+    _IPV6_EXT_HEADERS,
     _STUN_COOKIE,
     _TCP_FLAG_STR,
     _UDP_GATED_PORTS,
+    _ipv6,
     _tcp_l7,
     _tcp_options,
     _tcp_port_probes,
@@ -68,19 +74,25 @@ from wireduck_spark.sources.native import (
     stream_id,
 )
 
-# IPv4 protocol numbers _dissect_l4 handles beyond TCP/UDP — rows with
-# these fall back to the dict path; every other protocol number is the
-# dissector's "data" tail, which the fast path reproduces directly.
-_L4_FALLBACK_PROTOS = (1, 2, 47, 58, 89, 132)
+# IP protocol numbers _dissect_l4 handles beyond TCP, UDP and ICMP
+# (IGMP, GRE, ICMPv6, OSPF, SCTP): rows with these run the full-row
+# fallback; every other protocol number is the dissector's "data" tail,
+# which the fast path reproduces directly.
+_L4_FALLBACK_PROTOS = (2, 47, 58, 89, 132)
 
-# interned frame.protocols strings for the common TCP L7 labels
-_PROTO_TCP_LABELS = {
-    "http": "eth:ethertype:ip:tcp:http",
-    "tls": "eth:ethertype:ip:tcp:tls",
-    "ssh": "eth:ethertype:ip:tcp:ssh",
-    "dns": "eth:ethertype:ip:tcp:dns",
-    "http2": "eth:ethertype:ip:tcp:http2",
-}
+# frame.protocols of a fast-path row: link layer, network layer and
+# transport layer picked by index (an L7 label is appended per row)
+_L2_NAMES = ("eth:ethertype", "eth:vlan:ethertype")
+_L3_NAMES = ("data", "arp", "ip", "ipv6")
+_L4_NAMES = ("", ":data", ":tcp", ":udp", ":icmp")
+_PROTOCOLS = np.array([f"{l2}:{l3}{l4}" for l2 in _L2_NAMES
+                       for l3 in _L3_NAMES for l4 in _L4_NAMES], object)
+
+# the columns batch_columns takes from the batch itself, never from a
+# fallback row's dict
+_BATCH_FIELDS = frozenset((
+    "frame.number", "frame.time_epoch", "frame.len", "frame.cap_len",
+    "frame.raw", "frame.protocols"))
 
 # ---- the L7 prescreen -------------------------------------------------------
 # payload bytes the prescreen reads per row
@@ -144,6 +156,8 @@ def _udp_candidates(head, length, sport, dport) -> np.ndarray:
 
 # ---- column-at-a-time string builders ---------------------------------------
 _FLAG_STRS = pa.array(_TCP_FLAG_STR)
+_ICMP_INFO = np.array([_ICMP_KINDS.get(t, f"Type {t}") for t in range(256)],
+                      object)
 _HEX_DIGITS = np.frombuffer(b"0123456789abcdef", np.uint8)
 # the most bytes a pa.string() column's int32 offsets can address
 _MAX_STRING_BYTES = (1 << 31) - 1
@@ -254,30 +268,31 @@ def _hex_column(buf: bytes, lo: np.ndarray, hi: np.ndarray,
          pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(hexed)])
 
 
+def _ipv6_text(a: np.ndarray, at: np.ndarray) -> np.ndarray:
+    """native._ipv6 of the 16 bytes at each ``at``, as an object ndarray:
+    one call per distinct address."""
+    b = a[at[:, None] + np.arange(16)]
+    uniq, inv = np.unique(b.view("V16").ravel(), return_inverse=True)
+    return np.array([_ipv6(bytes(u)) for u in uniq], object)[inv]
+
+
 def batch_columns(recs: tuple, names: list[str], split: bool,
                   frame_no0: int, include_raw: bool) -> dict:
     """Dissect one COLUMNAR record batch into per-name column values.
 
-    ``recs``: (offs, epochs, incls, origs, datas, linktype) — parallel
-    per-batch lists (linktype is a scalar when uniform) as yielded by
-    native.open_record_batches. Returns {name: (np.ndarray, valid
-    mask) | object np.ndarray | pa.Array} for every requested name —
+    ``recs``: (offs, epochs, incls, origs, datas, linktype) as yielded by
+    native.open_record_batches — int64 arrays, a native.RecordBytes and
+    an int or int64 array. Returns {name: (np.ndarray, valid mask) |
+    object np.ndarray | pa.Array} for every requested name —
     pyarrow-ready.
     """
-    offs_l, epochs_l, incls_l, origs_l, datas, lt_raw = recs
+    offs, epoch, incl, orig, datas, lt_raw = recs
     n = len(datas)
-    lens = np.fromiter(map(len, datas), np.int64, n)
-    offsets = np.zeros(n + 1, np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    buf = b"".join(datas)
+    buf, s, lens = datas.buf, datas.start, datas.length
     a = np.frombuffer(buf, np.uint8)
-    s = offsets[:n]
-    if isinstance(lt_raw, int):
-        lt = np.full(n, lt_raw, np.int64)
-    else:
-        lt = np.array(lt_raw, np.int64)
+    lt = np.full(n, lt_raw, np.int64) if isinstance(lt_raw, int) else lt_raw
 
-    def g8(rel: np.ndarray, ok: np.ndarray) -> np.ndarray:
+    def g8(rel, ok: np.ndarray) -> np.ndarray:
         out = np.zeros(n, np.int64)
         out[ok] = a[(s + rel)[ok]]
         return out
@@ -296,31 +311,38 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
             | (a[i + 2].astype(np.int64) << 8) | a[i + 3]
         return out
 
-    # ---- L2 classification -------------------------------------------------
+    # ---- L2: Ethernet II, one 802.1Q tag -----------------------------------
     eth_ok = (lt == 1) & (lens >= 14)
-    et = g16(np.int64(12), eth_ok)
-    vlan = eth_ok & (et == 0x8100)
-    ip4 = eth_ok & (et == 0x0800) & ~vlan
-    ipv6 = eth_ok & (et == 0x86DD)
-    arp = eth_ok & (et == 0x0806)
-    ip4_ok = ip4 & (lens >= 34)
+    et = g16(12, eth_ok)
+    vlan = eth_ok & (et == 0x8100) & (lens >= 18)
+    tci = g16(14, vlan)
+    etype = np.where(vlan, g16(16, vlan), et)
+    l3 = np.where(vlan, 18, 14)
+    qinq = vlan & (etype == 0x8100)
+    ip4 = eth_ok & (etype == 0x0800) & (lens >= l3 + 20)
+    ip6 = eth_ok & (etype == 0x86DD) & (lens >= l3 + 40)
+    arp = eth_ok & (etype == 0x0806)
+    arp_ok = arp & (lens >= l3 + 28)
 
-    # ---- IPv4 fixed header -------------------------------------------------
-    m = ip4_ok
-    ver_ihl = g8(np.int64(14), m)
+    # ---- IPv4 and IPv6 fixed headers ---------------------------------------
+    ver_ihl = g8(l3, ip4)
     ihl = (ver_ihl & 0x0F) * 4
-    total_len = g16(np.int64(16), m)
-    ttl = g8(np.int64(22), m)
-    proto = g8(np.int64(23), m)
-    frag_word = g16(np.int64(20), m)
-    frag = m & ((frag_word & 0x1FFF) != 0)
-    src32 = g32(np.int64(26), m)
-    dst32 = g32(np.int64(30), m)
-    l4off = 14 + ihl
+    total_len = g16(l3 + 2, ip4)
+    ttl = g8(l3 + 8, ip4)
+    frag = ip4 & ((g16(l3 + 6, ip4) & 0x1FFF) != 0)
+    src32 = g32(l3 + 12, ip4)
+    dst32 = g32(l3 + 16, ip4)
+    next_hdr = g8(l3 + 6, ip6)
+    ext6 = ip6 & np.isin(next_hdr, _IPV6_EXT_HEADERS)
+    proto = np.where(ip4, g8(l3 + 9, ip4), next_hdr)
+    l4off = np.where(ip4, l3 + ihl, l3 + 40)
+    l3_paylen = np.where(ip4, total_len - ihl, g16(l3 + 4, ip6))
+    l4 = (ip4 & ~frag) | (ip6 & ~ext6)
 
-    tcp_m = m & ~frag & (proto == 6) & (lens >= l4off + 20)
-    udp_m = m & ~frag & (proto == 17) & (lens >= l4off + 8)
-    l4_rest = m & ~frag & ~tcp_m & ~udp_m
+    tcp_m = l4 & (proto == 6) & (lens >= l4off + 20)
+    udp_m = l4 & (proto == 17) & (lens >= l4off + 8)
+    icmp_m = l4 & (proto == 1) & (lens >= l4off + 4)
+    l4_rest = l4 & ~tcp_m & ~udp_m & ~icmp_m
     l4_fb = l4_rest & np.isin(proto, _L4_FALLBACK_PROTOS)
 
     # ---- TCP fixed header --------------------------------------------------
@@ -333,7 +355,7 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
     window = g16(l4off + 14, tcp_m)
     tcksum = g16(l4off + 16, tcp_m)
     data_off = (offres >> 4) * 4
-    tcp_paylen = np.maximum(total_len - ihl - data_off, 0)
+    tcp_paylen = np.maximum(l3_paylen - data_off, 0)
     # the captured payload: data[pstart:pstart + tcp_paylen]
     tcp_pstart = l4off + data_off
     tcp_caplen = np.where(
@@ -360,23 +382,27 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         (udport == 4789) | (usport == 2152) | (udport == 2152))
     udp_fast = udp_m & ~udp_fb
 
+    # ---- ICMP and ARP fixed fields -----------------------------------------
+    icmp_type = g8(l4off, icmp_m)
+    echo = icmp_m & ((icmp_type == 0) | (icmp_type == 8)) \
+        & (lens >= l4off + 8)
+    arp_ipv4 = arp_ok & (g16(l3 + 4, arp_ok) == 0x0604)  # hlen 6, plen 4
+    arp_op = g16(l3 + 6, arp_ok)
+
     # ---- full-row fallback set --------------------------------------------
-    fallback = vlan | ipv6 | (arp & eth_ok) | l4_fb | udp_fb
+    fallback = qinq | ext6 | l4_fb | udp_fb
 
     tcp_rows = np.flatnonzero(tcp_m)
     udp_rows = np.flatnonzero(udp_fast)
     fb_rows = np.flatnonzero(fallback)
 
     # ---- frame.protocols base ----------------------------------------------
-    protocols = np.empty(n, object)
+    l3_kind = np.select([arp, ip4, ip6], [1, 2, 3], 0)
+    l4_kind = np.select([tcp_m, udp_m, icmp_m, ip4 | ip6], [2, 3, 4, 1], 0)
+    protocols = _PROTOCOLS[(vlan * len(_L3_NAMES) + l3_kind)
+                           * len(_L4_NAMES) + l4_kind]
     protocols[lt != 1] = "raw"
     protocols[(lt == 1) & (lens < 14)] = "eth"
-    # ethertypes the fast path ends at "data" (unknown et, short IPv4)
-    protocols[eth_ok & ~ip4_ok & ~ipv6 & ~arp & ~vlan] = \
-        "eth:ethertype:data"
-    protocols[frag | (l4_rest & ~l4_fb)] = "eth:ethertype:ip:data"
-    protocols[tcp_rows] = "eth:ethertype:ip:tcp"
-    protocols[udp_rows] = "eth:ethertype:ip:udp"
 
     # ---- column store ------------------------------------------------------
     cols: dict = {}
@@ -386,22 +412,23 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         if name in want:
             cols[name] = (arr, valid.copy())
 
-    epoch = np.array(epochs_l, np.int64)
     always = np.ones(n, bool)
     if split:
-        frame_no = np.array(offs_l, np.int64)
+        frame_no = offs
     else:
         frame_no = np.arange(frame_no0, frame_no0 + n, dtype=np.int64)
     num("frame.time_epoch", epoch, always)
     num("frame.number", frame_no, always)
-    num("frame.len", np.array(origs_l, np.int64), always)
-    num("frame.cap_len", np.array(incls_l, np.int64), always)
-    num("eth.type", et, ip4_ok | (eth_ok & ~vlan & ~ip4_ok))
-    num("ip.version", ver_ihl >> 4, m)
-    num("ip.hdr_len", ihl, m)
-    num("ip.len", total_len, m)
-    num("ip.ttl", ttl, m)
-    num("ip.proto", proto, m)
+    num("frame.len", orig, always)
+    num("frame.cap_len", incl, always)
+    num("eth.type", etype, eth_ok)
+    num("vlan.id", tci & 0x0FFF, vlan)
+    num("vlan.priority", tci >> 13, vlan)
+    num("ip.version", ver_ihl >> 4, ip4)
+    num("ip.hdr_len", ihl, ip4)
+    num("ip.len", total_len, ip4)
+    num("ip.ttl", ttl, ip4)
+    num("ip.proto", proto, ip4)
     num("tcp.srcport", sport, tcp_m)
     num("tcp.dstport", dport, tcp_m)
     num("tcp.seq", seq, tcp_m)
@@ -414,22 +441,40 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
     num("udp.dstport", udport, udp_fast)
     num("udp.length", ulen, udp_fast)
     num("udp.checksum", ucksum, udp_fast)
+    num("icmp.type", icmp_type, icmp_m)
+    num("icmp.code", g8(l4off + 1, icmp_m), icmp_m)
+    num("icmp.checksum", g16(l4off + 2, icmp_m), icmp_m)
+    num("icmp.ident", g16(l4off + 4, echo), echo)
+    num("icmp.seq", g16(l4off + 6, echo), echo)
+    num("arp.opcode", arp_op, arp_ok)
     for fname, bit in (("tcp.flags.fin", 0x01), ("tcp.flags.syn", 0x02),
                        ("tcp.flags.reset", 0x04), ("tcp.flags.push", 0x08),
                        ("tcp.flags.ack", 0x10)):
         if fname in want:
             cols[fname] = ((flags & bit) != 0, tcp_m.copy())
 
-    ip_src = ip_dst = None
+    # L3 source and destination text: dotted quads on IPv4 rows, the
+    # dict path's IPv6 text on IPv6 rows (ip.* / ipv6.* and the flow ids)
+    ip_src = ip_dst = v6_src = v6_dst = None
+    ip6_rows = np.flatnonzero(ip6 & ~fallback)
     if want & {"ip.src", "ip.dst", "tcp.stream", "udp.stream"}:
         ip_src, ip_dst = _dotted(src32), _dotted(dst32)
+    if len(ip6_rows) and want & {"ipv6.src", "ipv6.dst", "tcp.stream",
+                                 "udp.stream"}:
+        at = s[ip6_rows] + l3[ip6_rows]
+        v6_src, v6_dst = _ipv6_text(a, at + 8), _ipv6_text(a, at + 24)
+    l3_src, l3_dst = ip_src, ip_dst
+    if ip_src is not None and v6_src is not None:
+        v6 = pa.array(ip6 & ~fallback)
+        l3_src = pc.replace_with_mask(ip_src, v6, pa.array(v6_src))
+        l3_dst = pc.replace_with_mask(ip_dst, v6, pa.array(v6_dst))
     for name, rows, sp, dp in (("tcp.stream", tcp_rows, sport, dport),
                                ("udp.stream", udp_rows, usport, udport)):
         if name in want:
             ids = np.zeros(n, np.int64)
             if len(rows):
-                ids[rows] = _stream_ids(
-                    ip_src.take(rows), sp[rows], ip_dst.take(rows), dp[rows])
+                ids[rows] = _stream_ids(l3_src.take(rows), sp[rows],
+                                        l3_dst.take(rows), dp[rows])
             valid = np.zeros(n, bool)
             valid[rows] = True
             cols[name] = (ids, valid)
@@ -444,11 +489,14 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         lists["eth.dst"][eth_rows] = _macs(a, s[eth_rows])
     if "eth.src" in lists:
         lists["eth.src"][eth_rows] = _macs(a, s[eth_rows] + 6)
-    ip_rows = np.flatnonzero(m & ~fallback)
+    ip_rows = np.flatnonzero(ip4 & ~fallback)
     for name, ips in (("ip.src", ip_src), ("ip.dst", ip_dst)):
         if name in lists:
             lists[name][ip_rows] = ips.take(ip_rows).to_numpy(
                 zero_copy_only=False)
+    for name, texts in (("ipv6.src", v6_src), ("ipv6.dst", v6_dst)):
+        if name in lists and texts is not None:
+            lists[name][ip6_rows] = texts
 
     info = lists.get("_ws.col.info")
     if info is not None and len(tcp_rows):
@@ -464,6 +512,34 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
             _dec(usport[r]), " → ", _dec(udport[r]), " Len=",
             _dec(ulen[r] - 8),
         ).to_numpy(zero_copy_only=False)
+    if info is not None:
+        r = np.flatnonzero(icmp_m)
+        info[r] = _ICMP_INFO[icmp_type[r]]
+
+    # ARP over Ethernet/IPv4 (hlen 6, plen 4): addresses and info text
+    arp_rows = np.flatnonzero(arp_ipv4)
+    if len(arp_rows):
+        at = s[arp_rows] + l3[arp_rows]
+        smac = _macs(a, at + 8)
+        sip = _dotted(g32(l3 + 14, arp_ipv4)[arp_rows])
+        dip = _dotted(g32(l3 + 24, arp_ipv4)[arp_rows])
+        for name, vals in (
+                ("arp.src.hw_mac", smac),
+                ("arp.src.proto_ipv4", sip.to_numpy(zero_copy_only=False)),
+                ("arp.dst.hw_mac", _macs(a, at + 18)),
+                ("arp.dst.proto_ipv4", dip.to_numpy(zero_copy_only=False))):
+            if name in lists:
+                lists[name][arp_rows] = vals
+        if info is not None:
+            op = arp_op[arp_rows]
+            text = np.where(
+                op == 1,
+                _joined("Who has ", dip, "? Tell ", sip).to_numpy(
+                    zero_copy_only=False),
+                _joined(sip, " is at ", pa.array(smac)).to_numpy(
+                    zero_copy_only=False))
+            named = (op == 1) | (op == 2)
+            info[arp_rows[named]] = text[named]
 
     def put_extras(i: int, extras: dict) -> None:
         for k, v in extras.items():
@@ -491,8 +567,7 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         if payload:
             label = _tcp_l7(payload, sp, dp, extras)
             if label:
-                protocols[i] = _PROTO_TCP_LABELS.get(label) or (
-                    "eth:ethertype:ip:tcp:" + label)
+                protocols[i] += ":" + label
         put_extras(i, extras)
 
     # ---- per-row UDP candidates (payload probe chain) ----------------------
@@ -510,26 +585,16 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
         _udp_payload_chain(data, off, data[off + 8:off + ln], sp, dp, tail,
                            extras)
         if tail:
-            protocols[i] = "eth:ethertype:ip:udp:" + ":".join(tail)
+            protocols[i] += ":" + ":".join(tail)
         put_extras(i, extras)
 
     # ---- full-row fallback: the exact dict path ----------------------------
     if len(fb_rows):
-        fnl = frame_no.tolist()
-        ltl = lt.tolist()
         targets = [(nm, cols.get(nm), lists.get(nm)) for nm in names
-                   if nm != "frame.protocols"]
-        for i in fb_rows.tolist():
-            data = datas[i]
-            fields: dict = {
-                "frame.number": fnl[i],
-                "frame.time_epoch": epochs_l[i],
-                "frame.len": origs_l[i],
-                "frame.cap_len": incls_l[i],
-            }
-            if include_raw:
-                fields["frame.raw"] = data.hex()
-            dissect_packet(data, ltl[i], fields)
+                   if nm not in _BATCH_FIELDS]
+        for i, linktype in zip(fb_rows.tolist(), lt[fb_rows].tolist()):
+            fields: dict = {}
+            dissect_packet(datas[i], linktype, fields)
             if "tcp.srcport" in fields:
                 fsrc = fields.get("ip.src") or fields.get("ipv6.src")
                 fdst = fields.get("ip.dst") or fields.get("ipv6.dst")
@@ -565,7 +630,7 @@ def batch_columns(recs: tuple, names: list[str], split: bool,
             {i: fb_pay[i] for i in fb_rows.tolist()
              if fb_pay[i] is not None})
     if include_raw and "frame.raw" in lists:
-        lists["frame.raw"] = _hex_column(buf, s, offsets[1:], always, {})
+        lists["frame.raw"] = _hex_column(buf, s, s + lens, always, {})
 
     out: dict = {}
     for nm in names:

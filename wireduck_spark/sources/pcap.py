@@ -115,16 +115,17 @@ def native_arrow_batches(
     message; the reference's analogue is the 2048-row DataChunk,
     cpp:176).
 
-    r15 OPTIMIZATION (guide §4.2): record batches go through the
-    VECTORIZED dissector (native_vec.batch_columns — NumPy gathers over
-    one concatenated byte buffer for the fixed L2/L3/L4 headers,
-    per-packet Python only for the payloads an L7 probe could claim and
-    off-fast-path rows), replacing the per-packet dict build +
-    per-column dict.get appends that dominated the old path's profile.
-    A column comes back as (values, valid mask), an object ndarray or a
-    ready pa.Array. Output is bit-identical to iter_packets by
-    construction (fallback rows literally run it); pinned by
-    tests/test_native_vec.py's full differential."""
+    Record batches go through the VECTORIZED dissector
+    (native_vec.batch_columns: NumPy gathers over the walk buffer the
+    records sit in for the fixed Ethernet/802.1Q, IPv4/IPv6, ARP, ICMP,
+    TCP and UDP headers). Per-packet Python runs only for the payloads
+    an L7 probe could claim, TCP rows with options, and the full-row
+    fallback (VXLAN/GTP decap ports, IPv6 extension-header chains,
+    QinQ, and the IGMP/GRE/ICMPv6/OSPF/SCTP protocols), which runs
+    native.dissect_packet. A column comes back as (values, valid mask),
+    an object ndarray or a ready pa.Array. Output is bit-identical to
+    iter_packets, pinned by tests/test_native_vec.py's full
+    differential."""
     import pyarrow as pa
 
     from wireduck_spark.sources import native_vec
