@@ -992,9 +992,8 @@ def test_chunk_edges_keep_every_record(tmp_path):
         blob = path.read_bytes()
         size = len(blob)
         assert 8 << 20 < size < 10 << 20
-        # every block start, and the edges the walk reads up to: each
-        # read runs _CHUNK bytes from the start of the block the
-        # previous read cut
+        # every block start, and the edges the walk reads up to: the
+        # reads are contiguous, _CHUNK bytes each after the head
         if path is classic:
             starts = [24 + i * (16 + len(f)) for i, (_, f) in
                       enumerate(frames)]
@@ -1003,11 +1002,9 @@ def test_chunk_edges_keep_every_record(tmp_path):
             while off < size:
                 starts.append(off)
                 off += int.from_bytes(blob[off + 4:off + 8], "little")
-        edge = head + native._CHUNK
-        while edge < size:
+        for edge in range(head + native._CHUNK, size, native._CHUNK):
             cut = starts[bisect_right(starts, edge) - 1]
-            assert cut < edge, (path.name, edge)
-            edge = cut + native._CHUNK
+            assert cut < edge < cut + 16 + 50_000, (path.name, edge)
 
         assert rows(path) == want, path.name
         parts = byte_range_partitions(str(path), 3)
@@ -1022,6 +1019,49 @@ def test_chunk_edges_keep_every_record(tmp_path):
                 == offsets(path, s, e)
             extracted += rows(out)
         assert extracted == want + want, path.name
+
+
+def test_record_walk_memory_stays_linear(tmp_path, monkeypatch):
+    """A batch never spans two walk buffers, so a walk holds a few
+    buffers at a time however many records a batch could take: with a
+    256 KiB read size, 100 records of 64 KiB read whole, at the default
+    4096 rows per batch, must peak at a few reads (the buffer being
+    refilled, the read, the new buffer and the batch the caller still
+    holds), not near the file (a walk that carried the batch into each new buffer held and copied
+    about size**2 / (2 * read size), here about 80 MiB). Every record
+    still comes back, and extract_slice copies the file verbatim."""
+    import tracemalloc
+
+    import wireduck_spark.sources.native as native
+
+    monkeypatch.setattr(native, "_CHUNK", 256 << 10)
+    frames = [
+        (1_700_000_000 + i / 8,
+         build_eth_ipv4_udp("10.0.0.1", "10.0.0.2", 1000 + i, 9,
+                            bytes([i]) * 65_494))
+        for i in range(100)
+    ]
+    for name, blob in (("big.pcap", build_pcap(frames)),
+                       ("big.pcapng", build_pcapng(frames))):
+        path = tmp_path / name
+        path.write_bytes(blob)
+        assert len(blob) > 24 * native._CHUNK
+        tracemalloc.start()
+        try:
+            batches, _ = native.open_record_batches(str(path))
+            got = [(len(b[0]), sum(map(len, b[4]))) for b in batches]
+            walk_peak = tracemalloc.get_traced_memory()[1]
+            tracemalloc.reset_peak()
+            out = tmp_path / (name + ".out")
+            native.extract_slice(str(path), None, None, str(out))
+            extract_peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert sum(n for n, _ in got) == len(frames), name
+        assert sum(b for _, b in got) == sum(len(f) for _, f in frames)
+        assert out.read_bytes() == blob, name
+        assert walk_peak < 8 * native._CHUNK, (name, walk_peak)
+        assert extract_peak < 8 * native._CHUNK, (name, extract_peak)
 
 
 def test_dns_name_depth_exhaustion_advances_past_pointer():

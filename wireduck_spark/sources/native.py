@@ -2485,19 +2485,25 @@ def _unsplit(start_byte):
     return None, None
 
 
-def _refill(fh, buf: bytes, base: int, lo: int, pos: int, offs: list,
-            need: int, raw: list) -> tuple[bytes, int, int]:
-    """(buffer, base, pos) after a refill, ``base`` being the file offset
-    of the buffer's first byte: the buffer is buf[keep:] plus one read of
-    at least max(_CHUNK, need) bytes, where keep is the start of the
-    first record of the batch being collected (``offs[0]``, a file
-    offset) or ``pos`` when there is none, so a batch's records always
-    sit in one buffer. The walked bytes buf[lo:pos] go to `raw` as a
-    view, which the next batch carries out (see _walk)."""
+def _refill(fh, buf: bytes, lo: int, pos: int, need: int,
+            raw: list) -> bytes:
+    """The walk buffer after a refill: buf[pos:] plus one read of at
+    least max(_CHUNK, need) bytes. The walked bytes buf[lo:pos] go to
+    `raw` as a view, which the next batch carries out (see _walk). The
+    walks cut the batch collected so far before a refill, so a batch's
+    records always sit in one buffer."""
     raw.append(memoryview(buf)[lo:pos])
-    keep = offs[0] - base if offs else pos
-    buf = b"".join((memoryview(buf)[keep:], fh.read(max(_CHUNK, need))))
-    return buf, base + keep, pos - keep
+    return buf[pos:] + fh.read(max(_CHUNK, need))
+
+
+def _cut(batch, buf: bytes, base: int, lo: int, pos: int, offs: list,
+         raw: list, *layout) -> tuple:
+    """The (offsets, columns, raw) triple a walk yields at buf[pos],
+    buf[0] being file offset ``base``: ``columns()`` is
+    ``batch(buf, offs, base, *layout)`` and the walked bytes buf[lo:pos]
+    join ``raw``."""
+    raw.append(memoryview(buf)[lo:pos])
+    return offs, partial(batch, buf, offs, base, *layout), raw
 
 
 class RecordBytes:
@@ -2570,37 +2576,49 @@ def _walk_classic(fh, size: int, start_byte, end_byte, batch_rows: int):
     hl = RECORD_HEADER_LEN
     buf = b""
     pos = lo = have = 0
-    stop, limit = end - base, size - base
     raw: list = [head]
     offs: list = []
-    while pos < stop:
+    while base + pos < end:
         if pos + hl > have:
-            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, 0, raw)
-            lo, have = pos, len(buf)
-            stop, limit = end - base, size - base
-            if pos + hl > have:
+            if offs:
+                yield _cut(_classic_batch, buf, base, lo, pos, offs, raw,
+                           *layout)
+                offs, raw, lo = [], [], pos
+            buf = _refill(fh, buf, lo, pos, 0, raw)
+            base += pos
+            pos = lo = 0
+            have = len(buf)
+            if hl > have:
                 break
         incl = incl_at(buf, pos + 8)[0]
         nxt = pos + hl + incl
-        if incl > cap or nxt > limit:
+        if incl > cap or base + nxt > size:
             break
         if nxt > have:
-            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, hl + incl,
-                                     raw)
-            lo, have = pos, len(buf)
-            stop, limit = end - base, size - base
-            nxt = pos + hl + incl
+            if offs:
+                yield _cut(_classic_batch, buf, base, lo, pos, offs, raw,
+                           *layout)
+                offs, raw, lo = [], [], pos
+            buf = _refill(fh, buf, lo, pos, hl + incl, raw)
+            base += pos
+            pos = lo = 0
+            have = len(buf)
+            nxt = hl + incl
             if nxt > have:
                 break
         offs.append(base + pos)
         pos = nxt
         if len(offs) >= batch_rows:
-            raw.append(memoryview(buf)[lo:pos])
-            lo = pos
-            yield offs, partial(_classic_batch, buf, offs, base, *layout), raw
-            offs, raw = [], []
-    raw.append(memoryview(buf)[lo:pos])
-    yield offs, partial(_classic_batch, buf, offs, base, *layout), raw
+            span = base + pos - offs[0]
+            yield _cut(_classic_batch, buf, base, lo, pos, offs, raw, *layout)
+            offs, raw, lo = [], [], pos
+            if have - pos < span and base + pos < end:
+                buf = _refill(fh, buf, lo, pos, min(span, end - base - pos),
+                              raw)
+                base += pos
+                pos = lo = 0
+                have = len(buf)
+    yield _cut(_classic_batch, buf, base, lo, pos, offs, raw, *layout)
 
 
 _SHB_TYPE = 0x0A0D0D0A
@@ -2801,15 +2819,20 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
     splittable = in_head = True
     buf = b""
     base = pos = lo = have = 0  # base: the file offset of buf[0]
-    end = stop = limit = size
+    end = size
     raw: list = []
     offs: list = []
-    while pos < stop and pos + 12 <= limit:
+    while base + pos < end and base + pos + 12 <= size:
         if pos + 12 > have:
-            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, 0, raw)
-            lo, have = pos, len(buf)
-            stop, limit = end - base, size - base
-            if pos + 12 > have:
+            if offs:
+                yield _pcapng_cut(buf, base, lo, pos, offs, endian,
+                                  interfaces, raw)
+                offs, raw, lo = [], [], pos
+            buf = _refill(fh, buf, lo, pos, 0, raw)
+            base += pos
+            pos = lo = 0
+            have = len(buf)
+            if 12 > have:
                 break
         btype, blen = hdr(buf, pos)
         if btype == _SHB_TYPE:  # section restart (the type is palindromic)
@@ -2823,7 +2846,7 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
             interfaces = []
             btype, blen = hdr(buf, pos)
         nxt = pos + blen
-        if blen < 12 or nxt > limit:
+        if blen < 12 or base + nxt > size:
             break
         if in_head and btype in (_EPB_TYPE, _SPB_TYPE):
             in_head = False
@@ -2831,14 +2854,12 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
                 start_byte, end_byte = _unsplit(start_byte)
             if end_byte is not None:
                 end = end_byte
-                stop = end - base
             if start_byte is not None and start_byte > base + pos:
                 raw.append(memoryview(buf)[lo:pos])
                 base = pcapng_resync_offset(fh, endian, start_byte, size)
                 fh.seek(base)
                 buf = b""
                 pos = lo = have = 0
-                stop, limit = end - base, size - base
             continue
         if blen > cap:
             # A giant blen must not become one near-file-sized read (r12
@@ -2857,14 +2878,18 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
                     fh.seek(base)
                     buf = b""
                     pos = lo = have = 0
-                    stop, limit = end - base, size - base
                     continue
             break
         if nxt > have:
-            buf, base, pos = _refill(fh, buf, base, lo, pos, offs, blen, raw)
-            lo, have = pos, len(buf)
-            stop, limit = end - base, size - base
-            nxt = pos + blen
+            if offs:
+                yield _pcapng_cut(buf, base, lo, pos, offs, endian,
+                                  interfaces, raw)
+                offs, raw, lo = [], [], pos
+            buf = _refill(fh, buf, lo, pos, blen, raw)
+            base += pos
+            pos = lo = 0
+            have = len(buf)
+            nxt = blen
             if nxt > have:
                 break
         if btype == _EPB_TYPE and blen >= 32 \
@@ -2883,20 +2908,25 @@ def _walk_pcapng(fh, size: int, start_byte, end_byte, batch_rows: int):
             interfaces.append((linktype, _idb_tsresol(body, endian)))
         pos = nxt
         if len(offs) >= batch_rows:
+            span = base + pos - offs[0]
             yield _pcapng_cut(buf, base, lo, pos, offs, endian, interfaces,
                               raw)
             offs, raw, lo = [], [], pos
+            if have - pos < span and base + pos < end:
+                buf = _refill(fh, buf, lo, pos, min(span, end - base - pos),
+                              raw)
+                base += pos
+                pos = lo = 0
+                have = len(buf)
     yield _pcapng_cut(buf, base, lo, pos, offs, endian, interfaces, raw)
 
 
 def _pcapng_cut(buf: bytes, base: int, lo: int, pos: int, offs: list,
                 endian: str, interfaces: list, raw: list) -> tuple:
-    """The (offsets, columns, raw) triple :func:`_walk_pcapng` yields at
-    buf[pos], buf[0] being file offset ``base``: the walked bytes
-    buf[lo:pos] join ``raw``."""
-    raw.append(memoryview(buf)[lo:pos])
-    return offs, partial(_pcapng_batch, buf, offs, base, endian,
-                         tuple(interfaces)), raw
+    """:func:`_cut` for a batch of packet blocks of one pcapng section
+    of byte order ``endian`` under the interface table ``interfaces``."""
+    return _cut(_pcapng_batch, buf, base, lo, pos, offs, raw, endian,
+                tuple(interfaces))
 
 
 def _walk(fh, size: int, start_byte, end_byte, batch_rows: int = 4096):
@@ -2911,9 +2941,15 @@ def _walk(fh, size: int, start_byte, end_byte, batch_rows: int = 4096):
     rows.
 
     The per-record loop only reads each record's length to find the
-    next one and notes the record's offset; a batch's records always
-    sit in one walk buffer (a refill carries the batch collected so
-    far), from which ``columns()`` gathers the header fields with NumPy.
+    next one and notes the record's offset; ``columns()`` gathers the
+    header fields with NumPy from the one walk buffer a batch's records
+    sit in. A batch ends at batch_rows records or where the walk
+    refills its buffer, whichever comes first, so no batch spans two
+    buffers. After a full batch the walk refills early when the rest of
+    the buffer is shorter than that batch (reading at least that batch's
+    length, up to the slice end), so the next batch of records of
+    similar size fits whole; a refill copies only the unwalked rest of
+    the buffer.
 
     start_byte/end_byte None read the whole file. Ownership is the
     byte_range_partitions contract: a record or block belongs to the
