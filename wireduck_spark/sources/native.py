@@ -2493,7 +2493,7 @@ def _refill(fh, buf: bytes, lo: int, pos: int, need: int,
     walks cut the batch collected so far before a refill, so a batch's
     records always sit in one buffer."""
     raw.append(memoryview(buf)[lo:pos])
-    return buf[pos:] + fh.read(max(_CHUNK, need))
+    return b"".join((memoryview(buf)[pos:], fh.read(max(_CHUNK, need))))
 
 
 def _cut(batch, buf: bytes, base: int, lo: int, pos: int, offs: list,
