@@ -126,12 +126,13 @@ MiB = 1 << 20
     (64 * MiB + 512 * 1024, 3),
 ])
 def test_split_rule_is_shared_by_batch_and_stream_readers(
-        tmp_path, size, n_slices):
+        spark, tmp_path, size, n_slices):
     """One split rule, planned from the size alone (the capture is a
     sparse file): at most SPLIT_BYTES stays one whole-file partition, a
     larger capture becomes ceil(size / SPLIT_BYTES) contiguous slices
     covering [header, size), and the batch and the stream reader plan
-    the same ranges for the same (path, size)."""
+    the same ranges for the same (path, size). read_pcap coalesces to
+    one partition exactly when that rule plans one, reading nothing."""
     import json
 
     from wireduck_spark.sources.native import GLOBAL_HEADER_LEN
@@ -163,6 +164,136 @@ def test_split_rule_is_shared_by_batch_and_stream_readers(
         assert ranges[0][0] == GLOBAL_HEADER_LEN
         assert ranges[-1][1] == size
         assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+    logical = read_pcap(spark, path, engine="native") \
+        ._jdf.queryExecution().logical().toString()
+    assert ("Repartition 1, false" in logical) == (n_slices == 1)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _collect_in_group(spark, df, group: str):
+    """(rows, number of Spark jobs the collect ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _top_dns(df):
+    """The perfbench ring op's question: the top-5 DNS query names."""
+    return (df.where(F.col("`dns.qry.name`").isNotNull())
+            .groupBy(F.col("`dns.qry.name`").alias("name"))
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.desc("n"), "name").limit(5))
+
+
+def test_one_partition_read_runs_as_one_job(spark, tmp_path):
+    """A read_pcap that plans one partition is coalesced to one, which
+    Catalyst sees as SinglePartition: the aggregate needs no Exchange
+    and the query runs as one Spark job. The same query over
+    spark.read.format("pcap") keeps its shuffle (two jobs under AQE)
+    and gives the same rows."""
+    from wireduck_spark.sources import synth
+
+    path = synth.session_capture(str(tmp_path / "s.pcap"))
+    one = _top_dns(read_pcap(spark, path, protocols=["dns"],
+                             engine="native"))
+    rows, jobs = _collect_in_group(spark, one, f"one-{tmp_path.name}")
+    assert "Exchange" not in _executed_plan(one)
+    assert jobs == 1
+    plain = _top_dns(spark.read.format("pcap").option("engine", "native")
+                     .option("protocols", "dns").load(path))
+    plain_rows, plain_jobs = _collect_in_group(
+        spark, plain, f"plain-{tmp_path.name}")
+    assert "Exchange hashpartitioning" in _executed_plan(plain)
+    assert plain_jobs > 1
+    assert rows == plain_rows
+    assert rows[0]["n"] == 2
+
+
+def test_glob_and_split_reads_keep_the_shuffle(spark, tmp_path):
+    """Only a one-partition read is coalesced: a two-file glob (two
+    partitions) and a capture above SPLIT_BYTES (byte-range slices,
+    planned from the size of a sparse file, so nothing is read) keep
+    Spark's hash Exchange before the aggregate."""
+    from wireduck_spark.sources import synth
+
+    for name in ("a.pcap", "b.pcap"):
+        synth.session_capture(str(tmp_path / "glob" / name))
+    glob = _top_dns(read_pcap(spark, f"{tmp_path}/glob/*.pcap",
+                              protocols=["dns"], engine="native"))
+    assert glob.collect()[0]["n"] == 4
+    assert "Exchange hashpartitioning" in _executed_plan(glob)
+
+    big = tmp_path / "big.pcap"
+    with open(big, "wb") as fh:
+        fh.truncate(pcap_mod.SPLIT_BYTES + 1)
+    split = _top_dns(read_pcap(spark, str(big), protocols=["dns"],
+                               engine="native"))
+    assert "Exchange hashpartitioning" in _executed_plan(split)
+
+
+def _by_protocols(df):
+    return (df.groupBy("`frame.protocols`")
+            .agg(F.count("*").alias("n"), F.sum("`frame.len`").alias("b")))
+
+
+def _udp_lag(df):
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("`udp.stream`").orderBy("`frame.number`")
+    return df.where(F.col("`udp.stream`").isNotNull()).select(
+        "`udp.stream`", "`frame.number`",
+        F.lag("`frame.time_epoch`").over(w).alias("prev"))
+
+
+def _tcp_self_join(df):
+    a = df.select(F.col("`tcp.stream`").alias("s"),
+                  F.col("`frame.number`").alias("fa"))
+    b = df.select(F.col("`tcp.stream`").alias("s"),
+                  F.col("`frame.number`").alias("fb"))
+    return a.join(b, "s")
+
+
+# (query, whether it shuffles over read_pcap, over spark.read.format).
+# A sort-merge join still shuffles a coalesced read: Spark 4 keeps a
+# single-partition join side unshuffled only when its estimated size is
+# at most spark.sql.maxSinglePartitionBytes, and a Python data source
+# reports no size.
+@pytest.mark.parametrize("query, one_shuffles, plain_shuffles", [
+    (_by_protocols, False, True),
+    (_udp_lag, False, True),
+    (_tcp_self_join, True, True),
+    (lambda df: df, False, False),
+])
+@pytest.mark.parametrize("climit", [None, 14])
+def test_coalesced_read_matches_the_shuffled_read(
+        spark, tmp_path, query, one_shuffles, plain_shuffles, climit):
+    """The coalesce changes the plan, never the data: an aggregate, a
+    window, a self-join and a plain (climit) read over read_pcap give
+    the rows of the same query over spark.read.format("pcap"), whose
+    aggregate and window still shuffle."""
+    from wireduck_spark.sources import synth
+
+    path = synth.session_capture(str(tmp_path / "s.pcap"))
+    protocols = ["tcp", "udp", "dns"]
+    one = query(read_pcap(spark, path, protocols=protocols, climit=climit,
+                          engine="native"))
+    reader = (spark.read.format("pcap").option("engine", "native")
+              .option("protocols", ",".join(protocols)))
+    if climit is not None:
+        reader = reader.option("climit", str(climit))
+    plain = query(reader.load(path))
+    got = sorted(map(tuple, one.collect()), key=repr)
+    assert got == sorted(map(tuple, plain.collect()), key=repr)
+    assert len(got) > 1
+    assert ("Exchange" in _executed_plan(one)) == one_shuffles
+    assert ("Exchange" in _executed_plan(plain)) == plain_shuffles
 
 
 def test_register_ships_the_package_once(spark, pcap_file):
